@@ -32,7 +32,6 @@ Aggregate semantics (eval.go:307-365, quirks §2.9.1-5):
 from __future__ import annotations
 
 import re as _re
-from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F

@@ -16,7 +16,6 @@ so the reference's per-row dispatch collapses to compile-time dispatch:
 from __future__ import annotations
 
 import enum
-from typing import Optional
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import (

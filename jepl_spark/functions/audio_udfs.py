@@ -186,7 +186,7 @@ def n_bands(n_fft: int) -> int:
     return len(_EDGES[n_fft]) - 1
 
 
-FEAT_DIM = 2 * n_bands(512)  # audio_features / spectral_features output
+FEAT_DIM = 2 * n_bands(512)  # audio_features output
 
 
 def _stats_of(x: "np.ndarray") -> tuple:
@@ -255,14 +255,6 @@ def with_audio_features(df: DataFrame, out_col: str = "af") -> DataFrame:
     return df.withColumn(out_col, audio_features(F.col("bytes"), F.col("codec")))
 
 
-@F.pandas_udf(ArrayType(FloatType()))
-def spectral_features(b: pd.Series, codec: pd.Series) -> pd.Series:
-    """FEAT_DIM-dim log-band features alone (512/256 hann framing)."""
-    return pd.Series(
-        [_band_feat_vector(audio.decode(blob, c)) for blob, c in zip(b, codec)]
-    )
-
-
 _HEAVY_CONFIGS = ((256, 128), (512, 256), (1024, 512))
 _N_MFCC = 13
 # DCT-II basis sized to the ACTUAL 512-window band count
@@ -304,10 +296,6 @@ def audio_features_heavy(b: pd.Series, codec: pd.Series) -> pd.Series:
             np.concatenate([p.astype(np.float32) for p in parts])
         )
     return pd.Series(feats_out)
-
-
-def with_spectral_features(df: DataFrame, out_col: str = "features") -> DataFrame:
-    return df.withColumn(out_col, spectral_features(F.col("bytes"), F.col("codec")))
 
 
 def resample_clips(df: DataFrame, target_sr: int) -> DataFrame:

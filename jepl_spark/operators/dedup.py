@@ -25,6 +25,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from jepl_spark.operators._guard import fits, plan_bytes
+
 
 # -- exact ------------------------------------------------------------------
 
@@ -143,13 +145,6 @@ def _banded_cross_candidates(
     )
 
 
-#: Plan-stats ceiling for the replicated minhash dedup_against probe:
-#: the snapshot's (num_hashes·8 B)-per-row signature matrix must fit
-#: the driver and every executor.  One-sided safe — unknown or large
-#: estimates keep the banded-join path, which streams any size.
-_AGAINST_BROADCAST_MAX_BYTES = 128 * 1024 * 1024
-
-
 def _minhash_against_losers_replicated(
     new_sigs: DataFrame,
     old_sigs: DataFrame,
@@ -161,24 +156,15 @@ def _minhash_against_losers_replicated(
     threshold: float,
     num_hashes: int,
 ) -> DataFrame:
-    """Delta-vs-snapshot loser ids computed LOCALLY (guide §3.1/§8 —
-    never shuffle what fits in memory; same recipe as
-    near_dup_components' local path): both signature tables collect
-    once (the size gate bounds them), band keys come from the shared
-    ``_np_band_key_matrix``, per-side hot-bucket caps apply to EXACT
-    global counts (run lengths over each band's sorted keys — a
-    distributed pass could not see these without an extra
-    aggregation), candidates via binary search of the snapshot's
-    per-band postings, and the same matches/num_hashes ≥ threshold
-    test runs vectorized over each doc's candidate rows.  The banded
-    explode of both sides, the two hot-bucket window shuffles, the
-    (band, key) join, both signature re-attach joins, and the pair
-    distinct — five exchanges — are replaced by two collect jobs and
-    an in-driver probe of the ~8·num_hashes-bytes/doc matrices.
-    Semantics are pinned to the join path: candidates share ≥ 1
-    (band, key) surviving the per-side cap, a doc loses if ANY
-    candidate qualifies, and null-signature rows on either side drop
-    exactly as posexplode drops them (flatten() skips null lists)."""
+    """Delta-vs-snapshot loser ids computed on the driver, for sides
+    that fit the guard: both signature tables collect once, band keys
+    come from ``_np_band_key_matrix``, per-side hot-bucket caps apply
+    to exact bucket counts, candidates come from a binary search of
+    the snapshot's per-band postings, and the matches/num_hashes ≥
+    threshold test runs vectorized.  Replaces five exchanges of the
+    banded join with two collects.  Semantics match the join path:
+    candidates share ≥ 1 (band, key) surviving the caps, a doc loses
+    if ANY candidate qualifies, and null signatures never band."""
     import numpy as np
 
     from pyspark.sql.types import StructType
@@ -304,10 +290,11 @@ def dedup_against(
     (band, key, id) rides the banded shuffle; signatures re-attach to
     the (tiny) candidate pair set by id; ``max_band_bucket`` caps hot
     buckets per side before the join ("auto" = 1000 for minhash,
-    None for simhash — preserving simhash's lossless guarantee;
-    capping trades recall for bounded work exactly as in the
-    within-batch operators).  The delta's losers materialize eagerly
-    (ids only) so no cache entry outlives the call."""
+    None for simhash — preserving simhash's lossless guarantee).
+    Under ``policy="minhash"``, sides whose signatures and band keys
+    fit the guard are probed on the driver instead.  The delta's
+    losers materialize eagerly (ids only), so no cache outlives the
+    call."""
     etc = existing_text_col or text_col
     if policy == "exact":
         hc = "__dedup_against_h"
@@ -409,21 +396,12 @@ def dedup_against(
 
     losers = None
     if policy == "minhash":
-        # local probe when the optimizer's own estimates say BOTH
-        # signature matrices fit the driver (the pre-hashed side
-        # table's scan stats are its file size; a raw-corpus side
-        # built through the Arrow UDF has no usable stats and keeps
-        # the streaming banded join; the delta side is bounded by its
-        # source-scan estimate)
-        def _est(frame: DataFrame) -> int:
-            try:
-                sz = (frame._jdf.queryExecution().optimizedPlan()
-                      .stats().sizeInBytes())
-                return int(sz if isinstance(sz, int) else sz.toString())
-            except Exception:
-                return 1 << 62
-        if (_est(old_sigs) <= _AGAINST_BROADCAST_MAX_BYTES
-                and _est(df) <= _AGAINST_BROADCAST_MAX_BYTES):
+        # local probe when both sides' collected matrices fit the
+        # guard: per row, num_hashes signature longs plus `bands` band
+        # keys.  Counting the persisted delta materializes the cache
+        # the collect (or the banded join) then reads.
+        n_rows = new_sigs.count() + old_sigs.count()
+        if fits("minhash_against", n_rows * (num_hashes + bands) * 8):
             losers = _minhash_against_losers_replicated(
                 new_sigs, old_sigs, id_col, sig_col, bands, rows, cap,
                 threshold, num_hashes,
@@ -736,9 +714,6 @@ def banded_candidate_pairs(
 # -- MinHash + LSH -------------------------------------------------------------
 
 
-_MAXL = (1 << 63) - 1
-
-
 _MH_PRIME = (1 << 31) - 1  # Mersenne prime 2^31−1
 
 
@@ -755,16 +730,6 @@ def _minhash_coeffs(num_hashes: int, seed: int = 0x9E3779B9) -> tuple[list[int],
     a = [rng.randrange(1, _MH_PRIME) for _ in range(num_hashes)]
     b = [rng.randrange(0, _MH_PRIME) for _ in range(num_hashes)]
     return a, b
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature over STRING shingles: ONE xxhash64 per shingle,
-    then the universal-hash family (see minhash_signature_from_hashes).
-    The operators call the _from_hashes form directly on
-    word_shingle_hashes output, skipping this extra hash pass."""
-    return minhash_signature_from_hashes(
-        F.transform(shingles, lambda s: F.xxhash64(s)), num_hashes
-    )
 
 
 def minhash_signature_from_hashes(hashes: Column, num_hashes: int = 64) -> Column:
@@ -1028,7 +993,6 @@ def minhash_candidates(
             f"from banding while est_jaccard still averaged over all "
             f"of them — not the (b, r) scheme the caller computed"
         )
-    rows = num_hashes // bands
     # Cache the signature table: it feeds four consumers (banding,
     # bucket sizing, both sides of the pair join) and would otherwise
     # recompute the signatures per consumer.  persist(), not
@@ -1110,27 +1074,17 @@ def near_dup_components(
     propagated, then mapped back with ``component`` recomputed as the
     MINIMUM ORIGINAL id of each cluster (lexicographic for strings) —
     so the "smallest reachable id" contract holds for every id type.
-    The earlier behavior (``cast('long')``) either raised an opaque
-    ANSI ``CAST_INVALID_INPUT`` on string ids or, with ANSI off,
-    NULLed them out and silently dropped the rows — while
-    ``policy='pairs'`` handled any id type; this path now does too.
 
     Algorithm: iterative min-label propagation with pointer jumping
     (label(x) ← min over neighbors' labels, then ``jumps`` rounds of
-    label(x) ← label(label(x))).  Each jump composes the label map
-    with itself, so ``jumps=2`` (default) compresses reach ~4× per
-    round — measured ~20% faster than one jump on 32-deep chain
-    graphs (8.0 s vs 9.8 s at 200k edges, local[32]) and fewer rounds
-    at any diameter; set ``jumps=1`` for known-shallow graphs (typical
-    near-dup clusters, diameter ≤ 3) where the extra per-round join
-    buys nothing.  Every round's frames are ids-only (long, long)
-    shuffles; per-round ``localCheckpoint`` truncates the iterative
-    lineage so the plan (and its re-execution cost on failure) stays
-    flat at any round count.  Monotone: labels only decrease and are
-    bounded by the component minimum, so the fixpoint (no label
-    changed) IS the component labeling; a fixpoint miss within
-    ``max_rounds`` raises rather than returning a partial clustering
-    silently.
+    label(x) ← label(label(x))).  ``jumps=2`` (default) compresses
+    reach ~4× per round (measured ~20% faster than one jump on 32-deep
+    chains); ``jumps=1`` suits known-shallow graphs.  Every round's
+    frames are ids-only (long, long) shuffles, each round's lineage is
+    cut by ``localCheckpoint``, and the monotone fixpoint (no label
+    changed) IS the component labeling; a miss within ``max_rounds``
+    raises.  An edge set that fits the guard (16 bytes per edge) runs
+    the same pointer jumping in one task instead (``_components_local``).
     """
     if jumps < 1:
         raise ValueError(f"jumps must be >= 1, got {jumps}")
@@ -1165,13 +1119,14 @@ def near_dup_components(
     # Small-graph fast path: near-dup pair graphs are typically tiny
     # vs the corpus (thresholded pairs).  The edge set is already
     # materialized by the checkpoint above, so counting it is a
-    # block-read; under the threshold the whole graph collects
-    # (~16 B/edge), broadcasts, and ONE executor task runs in-memory
-    # pointer jumping to the exact same min-label fixpoint — the
-    # distributed loop's ~5 rounds of multi-stage joins (measured
-    # ~1.1 s/round of pure scheduling at 200k edges) collapse to one
-    # job.  Larger graphs keep the iterative ids-only rounds below.
-    if edges.count() <= _COMPONENTS_LOCAL_MAX_EDGES:
+    # block-read; when the graph fits the guard's budget it collects
+    # (exactly 16 B/edge: two longs), broadcasts, and ONE executor
+    # task runs in-memory pointer jumping to the exact same min-label
+    # fixpoint — the distributed loop's ~5 rounds of multi-stage joins
+    # (measured ~1.1 s/round of pure scheduling at 200k edges)
+    # collapse to one job.  Larger graphs keep the iterative ids-only
+    # rounds below.
+    if fits("near_dup_components", 16 * edges.count()):
         return _components_local(edges)
     labels = (
         edges.select(F.col("src").alias("id"))
@@ -1237,23 +1192,11 @@ def near_dup_components(
     )
 
 
-#: Edge-count ceiling for the local connected-components path: 5M
-#: bidirectional edges ≈ 80 MB of index per executor and well under a
-#: second of in-memory label propagation — far past any realistic
-#: near-dup pair graph, while billion-edge graphs keep the iterative
-#: distributed rounds.
-_COMPONENTS_LOCAL_MAX_EDGES = 5_000_000
-
-
 def _components_local(edges: DataFrame) -> DataFrame:
-    """Exact min-label connected components of a SMALL (already
-    counted) bidirectional edge frame, computed by vectorized pointer
-    jumping inside one executor task: codes = ids sorted ascending
-    (so min code ⇔ min id), then rounds of
-    ``label ← min(label, min over incident edges of neighbor label)``
-    followed by ``label ← label[label]`` until the fixpoint — the
-    same monotone fixpoint as the distributed loop, so the output
-    labeling is identical."""
+    """Exact min-label connected components of an edge frame that fits
+    the guard, by vectorized pointer jumping in one executor task over
+    ids sorted ascending (min code ⇔ min id) — the distributed loop's
+    monotone fixpoint, so the labeling is identical."""
     import numpy as np
     import pyarrow as pa
 
@@ -1541,19 +1484,6 @@ def simhash_hamming_near_dups(
         out = out.localCheckpoint(eager=True)  # tiny: thresholded pairs
         base.unpersist()
     return out
-
-
-def simhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact-signature SimHash dedup: keep min-id per 64-bit signature.
-    (Hamming-distance>0 search: simhash_hamming_near_dups.)"""
-    sig = simhash64(F.col(text_col)).alias("__sim")
-    reps = (
-        df.select(sig, F.col(id_col))
-        .groupBy("__sim")
-        .agg(F.min(id_col).alias(id_col))
-        .drop("__sim")
-    )
-    return df.join(reps, on=id_col, how="inner")
 
 
 _INTERVAL_UNIT_S = {
@@ -1944,24 +1874,19 @@ def ngram_jaccard_pairs(
     become likely; per-pair intersection counts are additionally
     oracle-checked by the ngram_jaccard_pairs gate.
 
-    Shape (integral-id fast path): TWO exchanges total, both
-    fundamental — (1) postings ``(id, set_size, shingle)`` partition by
-    shingle, so each shingle's full posting group lands in one task
-    where an Arrow stage applies the df cap from the local group size
-    (no df-count groupBy + join back) and emits co-occurrence rows
-    ``(id_a, id_b, na, nb)`` by pure numpy index arithmetic; (2) the
-    co-occurrences partition by pair, where a second Arrow stage counts
-    each pair's rows (= the exact intersection size), computes jaccard
-    = c/(na+nb−c) in IEEE doubles (bit-identical to the JVM division),
-    and emits ONLY the pairs ≥ ``min_jaccard``.  The ≥-threshold set is
-    tiny, so nothing heavyweight ever crosses back: the old
-    join+groupBy formulation materialized every co-occurring pair
-    (~90% of which share exactly one shingle) through a JVM
-    hash-aggregate and two size joins — measured 316 s vs 21 s at
-    sf1.0 (50k docs, 114M distinct co-occurring pairs).  Non-integral
-    ids (string/UUID) keep the join formulation (numpy pair packing
-    needs a total order identical to Spark's, which only integral
-    types guarantee)."""
+    Shape (integral ids): when the per-doc shingle table fits the
+    guard, it is collected and broadcast once and each task counts the
+    complete pairs of its slice of ids.  Otherwise TWO exchanges:
+    postings ``(id, set_size, shingle)`` partition by shingle, where an
+    Arrow stage applies the df cap and emits co-occurrence rows by
+    numpy index arithmetic; those partition by pair, where a second
+    Arrow stage counts each pair's rows (= the exact intersection),
+    computes jaccard = c/(na+nb−c) in IEEE doubles (bit-identical to
+    the JVM division) and emits ONLY the pairs ≥ ``min_jaccard`` —
+    316 s → 21 s at sf1.0 against a join+groupBy formulation.
+    Non-integral ids (string/UUID) keep that join formulation (numpy
+    pair packing needs a total order identical to Spark's, which only
+    integral types guarantee)."""
     from pyspark.sql.types import (
         ByteType, IntegerType, LongType, ShortType,
     )
@@ -2055,25 +1980,24 @@ def _ngram_jaccard_pairs_arrow(
     thresh = float(min_jaccard)
 
     # Replicated-index path (guide §3.1/§8: broadcast the small side,
-    # never shuffle the heavy intermediate): when the CORPUS is small
-    # enough — by the optimizer's own plan-size estimate — the per-doc
-    # shingle table collects to ~8 bytes/shingle, broadcasts once, and
-    # every task computes COMPLETE pair counts for its hash-slice of
+    # never shuffle the heavy intermediate): when the per-doc shingle
+    # table fits the guard, it collects, broadcasts once, and every
+    # task computes COMPLETE pair counts for its hash-slice of
     # smaller-endpoint ids, emitting only the ≥ min_jaccard survivors.
     # The co-occurrence stream (114M distinct pairs at sf1.0 — 90%
     # sharing exactly one shingle) then never crosses an exchange or
     # the Arrow boundary at all: measured 46 s (exchange path) → 13 s.
-    # The estimate is one-sided safe: unknown/large stats fall back to
-    # the exchange path below, which streams any corpus size.
-    try:
-        sz = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        est_bytes = int(sz if isinstance(sz, int) else sz.toString())
-    except Exception:
-        est_bytes = 1 << 62
-    if materialize and est_bytes <= _NGRAM_BROADCAST_MAX_BYTES:
-        # (materialize=False keeps the lazy exchange plan: the
-        # replicated path collects the index at call time, which the
-        # side-effect-free plan-audit contract forbids)
+    # Rows vary in width, so no row count gives the collected size;
+    # the guard gets the bound 4 × the input's plan-size estimate: a
+    # doc of B text bytes has at most ~B/2 whitespace tokens, so at
+    # most ~B/2 shingles of 8 bytes each.  That bound is only as good
+    # as the estimate, which for a file scan is the on-disk (possibly
+    # compressed) size of the text; unknown stats keep the exchange
+    # path below, which streams any corpus size.
+    # (materialize=False keeps the lazy exchange plan: the replicated
+    # path collects the index at call time, which the side-effect-free
+    # plan-audit contract forbids.)
+    if materialize and fits("ngram_jaccard_pairs", 4 * plan_bytes(df)):
         return _ngram_jaccard_pairs_replicated(
             df, text_col, id_col, shingle_n, thresh, cap, id_type,
         )
@@ -2221,15 +2145,6 @@ def _ngram_jaccard_pairs_arrow(
     return out
 
 
-#: Plan-stats ceiling for the replicated-index ngram path: above this
-#: estimated input size the operator keeps the streaming exchange
-#: shape (a replicated index must fit every executor; 256 MB of input
-#: text ⇒ roughly 50M postings ≈ 600 MB of index per worker at the
-#: extreme — the safe upper edge for a 100+ GB box, and far below
-#: what the exchange path handles).
-_NGRAM_BROADCAST_MAX_BYTES = 256 << 20
-
-
 def _ngram_jaccard_pairs_replicated(
     df: DataFrame,
     text_col: str,
@@ -2239,35 +2154,25 @@ def _ngram_jaccard_pairs_replicated(
     cap: int,
     id_type,
 ) -> DataFrame:
-    """Small-corpus fast path of :func:`ngram_jaccard_pairs`: one
-    Arrow collect of the per-doc ``(id, set_size, shingle_hashes)``
-    table (8 bytes/shingle), one broadcast, and P independent tasks
-    each owning the hash-slice ``H(id_a) % P`` of smaller-endpoint
-    ids.  Groups are sorted by (shingle, id), so the smaller endpoint
-    of every pair is the generation-time LEFT element — every
-    co-occurrence of a pair is generated in exactly its owner's task,
-    making local counts complete and the jaccard threshold applicable
-    before anything leaves the task.  Math (df cap incl. null-id
-    postings, null/equal-id pair exclusion, IEEE double jaccard) is
-    identical to the exchange path."""
+    """Replicated-index path of :func:`ngram_jaccard_pairs`, for a
+    shingle table that fits the guard: one collect of the per-doc
+    shingle hashes, one broadcast, and P tasks each owning the slice
+    ``H(id_a) % P`` of smaller-endpoint ids.  Postings sort by
+    (shingle, id), so every co-occurrence of a pair is generated in
+    its owner's task: local counts are complete and the threshold
+    applies before anything leaves the task.  The math is the
+    exchange path's."""
     import numpy as np
     import pyarrow as pa
 
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    import os as _os
-    import time as _time
-    _dbg = _os.environ.get("JEPL_NGRAM_DEBUG") == "1"
-    _t0 = _time.time()
     spark = df.sparkSession
     per_doc = df.select(
         F.col(id_col).alias("__id"),
         word_shingle_hashes(F.col(text_col), shingle_n).alias("__sh"),
     )
     tbl = per_doc.toArrow().combine_chunks()
-    if _dbg:
-        print(f"[ngram] collect {_time.time()-_t0:.2f}s", flush=True)
-        _t0 = _time.time()
     idc = (tbl.column("__id").chunk(0)
            if tbl.column("__id").num_chunks
            else pa.array([], type=tbl.schema.field("__id").type))
@@ -2346,16 +2251,10 @@ def _ngram_jaccard_pairs_replicated(
             (ids_d.astype(np.int64).view(np.uint64) * K) >> np.uint64(33)
         ) % np.uint64(n_parts)
     owner_doc = owner_doc.astype(np.int32)
-    if _dbg:
-        print(f"[ngram] prep {_time.time()-_t0:.2f}s", flush=True)
-        _t0 = _time.time()
     bc = spark.sparkContext.broadcast(
         (ids_d, lens_d, doc_s32, grp_end, pos_by_doc, doc_offs,
          owner_doc)
     )
-    if _dbg:
-        print(f"[ngram] broadcast {_time.time()-_t0:.2f}s", flush=True)
-        _t0 = _time.time()
 
     out_schema = StructType([
         StructField("id_a", id_type),
@@ -2419,8 +2318,6 @@ def _ngram_jaccard_pairs_replicated(
     out = spark.range(0, n_parts, 1, n_parts).mapInArrow(
         _slice_pairs, out_schema
     ).localCheckpoint(eager=True)  # tiny: thresholded pairs
-    if _dbg:
-        print(f"[ngram] slices {_time.time()-_t0:.2f}s", flush=True)
     bc.unpersist()  # checkpoint is eager — no task reads it again
     return out
 

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import math
 import random
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F

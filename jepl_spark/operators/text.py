@@ -15,6 +15,8 @@ import re as _re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from jepl_spark.operators._guard import fits
+
 # whitespace tokenization shared by several operators
 def _tokens(text: Column) -> Column:
     t = F.trim(text)
@@ -222,8 +224,6 @@ def fingerprint_overlap_pairs(
     Scale shape: the ngram_jaccard_pairs inverted-index pattern —
     (id, fingerprint) explodes, hot fingerprints (boilerplate) are
     df-capped, the self-join carries ids+longs only."""
-    from .dedup import banded_candidate_pairs  # noqa: F401  (pattern ref)
-
     base = df.select(
         F.col(id_col).alias("__id"),
         F.explode(winnow_fingerprints(F.col(text_col), k, window)).alias("__fp"),
@@ -622,13 +622,6 @@ def top_tokens(
     return counts.orderBy(F.col("cnt").desc(), F.col("token").asc()).limit(k)
 
 
-#: Hot-line count above which strip_boilerplate_lines keeps its
-#: streaming join-back shape: the local path's literal-array
-#: membership scan is O(|hot|) PER LINE, so it only wins while the
-#: stripped set is the expected handful of nav/footer strings.
-_BOILERPLATE_LOCAL_MAX_LINES = 64
-
-
 def strip_boilerplate_lines(
     df: DataFrame,
     max_df: int = 1,
@@ -647,6 +640,12 @@ def strip_boilerplate_lines(
     WITHIN one document count once toward that line's document
     frequency (df is per-doc, so a doc self-repeating its header does
     not globalize it).
+
+    Rows that share a ``doc_id`` (NULL included) are ONE document: they
+    count once toward a line's document frequency, and every one of
+    them gets the same rebuilt text — the surviving lines of all those
+    rows merged by line position (equal positions ordered by line
+    text).
 
     Shape: posexplode lines (position kept for reassembly) → one
     exchange on the trimmed line for the document-frequency count
@@ -673,54 +672,26 @@ def strip_boilerplate_lines(
         .agg(F.count(F.lit(1)).alias("__df"))
         .where(F.col("__df") > max_df)
     )
-    # The hot set is the FILTERED aggregate — boilerplate lines only,
-    # normally a handful of nav/footer strings.  When it is small
-    # enough to hold (probed with a bounded collect, exact either
-    # way), stripping becomes a pure per-row projection: re-split the
-    # text and drop lines whose trimmed form is in the collected set —
-    # the line join-back, the per-doc ordered reassembly exchange, and
-    # the final doc join all disappear from the plan.  A short line
-    # can never equal a hot key (dfreq only counts keys of length ≥
-    # min_line_chars), so the projection needs no length guard, same
-    # as the join path's null-marker check.  A pathological corpus
-    # with more hot lines than the probe bound falls back to the
-    # streaming join shape below (the aggregation recomputes — only
-    # ever paid in that pathological case).
-    hot_rows = dfreq.select("__key").limit(
-        _BOILERPLATE_LOCAL_MAX_LINES + 1).collect()
-    if len(hot_rows) <= _BOILERPLATE_LOCAL_MAX_LINES:
-        if not hot_rows:
-            # nothing to strip: split+rejoin on '\n' is the identity
-            rebuilt_txt = F.col(text_col)
-        else:
-            hot = F.lit([r[0] for r in hot_rows])
-            rebuilt_txt = F.concat_ws("\n", F.filter(
-                F.split(F.col(text_col), "\n"),
-                lambda ln: ~F.array_contains(hot, F.trim(ln)),
-            ))
-        clean = F.when(
-            F.col(text_col).isNull(), F.lit(None).cast("string")
-        ).otherwise(rebuilt_txt)
-        return df.withColumn(out_col, clean)
     # short lines can never appear in dfreq (it only counts countable
     # keys), so a plain null-check on the join marker suffices
     kept = lines.join(
         dfreq.select("__key", F.lit(True).alias("__drop")), "__key", "left"
     ).where(F.col("__drop").isNull())
-    rebuilt = kept.groupBy(id_col).agg(
+    rebuilt = kept.groupBy(F.col(id_col).alias("__rid")).agg(
         F.concat_ws(
             "\n", F.transform(F.array_sort(
                 F.collect_list(F.struct("__pos", "__line"))
             ), lambda s: s["__line"])
         ).alias("__clean")
     )
-    base = df.join(rebuilt, id_col, "left")
+    # null-safe: the NULL-id rows are one document too, not dropped text
+    base = df.join(rebuilt, df[id_col].eqNullSafe(rebuilt["__rid"]), "left")
     # docs whose every line was stripped (or NULL text) need care:
     # NULL text stays NULL; a fully-stripped doc becomes ''
     clean = F.when(
         F.col(text_col).isNull(), F.lit(None).cast("string")
     ).otherwise(F.coalesce(F.col("__clean"), F.lit("")))
-    return base.withColumn(out_col, clean).drop("__clean")
+    return base.withColumn(out_col, clean).drop("__rid", "__clean")
 
 
 def oov_rate(
@@ -986,15 +957,15 @@ class BigramLM:
         self._vocab_size = None if vocab_size is None else int(vocab_size)
         self.alpha = float(alpha)
         self.hashed = hashed
+        # the guard's decision for the replicated score path and its
+        # broadcast, both made once per model (see _model_broadcast)
+        self._local: bool | None = None
+        self._model_bc = None
 
     @property
     def vocab_size(self) -> int:
-        """Distinct-word count, lazily materialized from the persisted
-        unigram table on first use: the string score path needs it as
-        a literal at plan-build time (the count job runs then), while
-        the replicated hashed path derives it from the collected
-        unigram array's length instead — same value, one fewer
-        corpus-scan job."""
+        """Distinct-word count, counted once from the persisted
+        unigram table on first use."""
         if self._vocab_size is None:
             self._vocab_size = self.uni.count()
         return self._vocab_size
@@ -1059,66 +1030,60 @@ def lm_train(
         big = big.where(F.col("c2") >= min_count)
     key = F.col("key") if hash_keys else F.col("bg")
     ukey = F.xxhash64("w") if hash_keys else F.col("w")
+    # persisted like the unigrams: lm_score counts the bigram table for
+    # the guard, then collects or joins it, off one training-corpus pass
     return BigramLM(
-        big.select(key.alias("key"), "c2"),
+        big.select(key.alias("key"), "c2").persist(),
         uni.select(ukey.alias("ukey"), "c1"),
         None, alpha, hash_keys,
     )
 
 
-#: Plan-stats ceiling for the replicated-model score path: above this
-#: input estimate the exploded join keeps the streaming scale shape (a
-#: replicated model must fit the driver and every executor; ~64 MB of
-#: text bounds the Heaps-law bigram table to low-hundreds-of-MB of
-#: sorted int64 key/count arrays).  One-sided safe: unknown or large
-#: plan stats fall back to the join path, which streams any size.
-_LM_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
+def _model_broadcast(lm: BigramLM):
+    """The hashed model's bigram and unigram tables as sorted key /
+    count arrays, collected and broadcast once per model — or None
+    when they do not fit the guard (16 bytes per row; both tables are
+    persisted, so counting then collecting them reads the training
+    corpus once).  The broadcast lives as long as the model, since
+    lazy score frames read it whenever they run."""
+    import numpy as np
+
+    if lm._local is None:
+        lm._local = fits("lm_score", 16 * (lm.table.count() + lm.vocab_size))
+        if lm._local:
+            arrays = []
+            for frame, k, c in ((lm.table, "key", "c2"), (lm.uni, "ukey", "c1")):
+                t = frame.toArrow()
+                keys = t.column(k).to_numpy().astype(np.int64, copy=False)
+                counts = t.column(c).to_numpy().astype(np.float64, copy=False)
+                order = np.argsort(keys)
+                arrays += [np.ascontiguousarray(keys[order]),
+                           np.ascontiguousarray(counts[order])]
+            lm._model_bc = lm.table.sparkSession.sparkContext.broadcast(
+                tuple(arrays))
+    return lm._model_bc
 
 
 def _lm_score_replicated(
-    df: DataFrame, lm: BigramLM, text_col: str, id_col: str
+    df: DataFrame, lm: BigramLM, model_bc, text_col: str, id_col: str
 ) -> DataFrame:
-    """Score against a COLLECTED hashed model (guide §3.1/§8 —
-    broadcast the small side, never shuffle the heavy intermediate):
-    the bigram/unigram count tables collect to sorted int64 key/count
-    arrays, broadcast once, and each task scores its documents in one
-    Arrow pass — bigram keys from the same vectorized xxhash64 chain
-    as the train side, counts via binary search, per-doc (n, Σlogp)
-    partials out.  The per-occurrence (key, ukey) explode, its
-    3M-row shuffle join, and the distinct+join-back for zero-bigram
-    docs all disappear; only the id-array projection crosses the Arrow
-    boundary and only two 8-byte columns come back.  The final
-    ``groupBy(id)`` over per-row partials keeps duplicate-id semantics
-    identical to the join path (occurrences aggregate across a doc's
-    rows) at the cost of one exchange of (id, long, double) rows.
-    Output parity: n_bigrams is the same occurrence count; avg_logp
-    sums the same smoothed logp terms, rounded to 6 decimals exactly
-    as the join path (whose own summation order is shuffle-dependent —
-    round(6) is the declared stability contract)."""
+    """Score against the broadcast hashed model of ``_model_broadcast``:
+    each task scores its documents in one Arrow pass — bigram keys
+    from the train side's xxhash64 chain, counts by binary search,
+    per-doc (n, Σlogp) partials out — instead of exploding and
+    shuffle-joining every bigram occurrence.  The final ``groupBy(id)``
+    keeps the join path's duplicate-id semantics (occurrences
+    aggregate across a doc's rows); avg_logp is rounded to 6 decimals
+    exactly as the join path, whose summation order is shuffle-
+    dependent (round(6) is the declared stability contract)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     from jepl_spark.operators.dedup import _np_chain, _token_hashes
 
-    tb = lm.table.toArrow()
-    keys = tb.column("key").to_numpy().astype(np.int64, copy=False)
-    c2 = tb.column("c2").to_numpy().astype(np.float64, copy=False)
-    order = np.argsort(keys)
-    keys, c2 = np.ascontiguousarray(keys[order]), np.ascontiguousarray(
-        c2[order])
-    tu = lm.uni.toArrow()
-    ukeys = tu.column("ukey").to_numpy().astype(np.int64, copy=False)
-    c1 = tu.column("c1").to_numpy().astype(np.float64, copy=False)
-    order = np.argsort(ukeys)
-    ukeys, c1 = np.ascontiguousarray(ukeys[order]), np.ascontiguousarray(
-        c1[order])
     alpha = float(lm.alpha)
-    # one entry per uni row, so len(ukeys) == uni.count() == vocab_size
-    # exactly — no separate count job
-    a_v = float(lm.alpha * ukeys.size)
-    model_bc = df.sparkSession.sparkContext.broadcast(
-        (keys, c2, ukeys, c1))
+    a_v = float(lm.alpha * lm.vocab_size)
 
     def _score(th_s):
         n_rows = len(th_s)
@@ -1198,27 +1163,23 @@ def lm_score(
     avg_logp); documents with < 2 tokens carry n_bigrams = 0 and a
     NULL score (no evidence — do not confuse with a bad score).
 
-    Scale shape: two shuffle joins of the docs' exploded bigrams —
-    against the bigram counts on the bigram key and the unigram counts
-    on the first-word key (both 8-byte hashes when the model was
-    trained with ``hash_keys``; the unigram side is vocabulary-sized
-    and broadcasts) — then one (id) exchange for the per-doc average;
-    rounded to 6 decimals so the result is stable under distributed
-    summation order and replayable in SQL."""
+    Scale shape: a hashed model that fits the guard is broadcast and
+    each task scores its documents locally; otherwise two shuffle
+    joins of the docs' exploded bigrams — against the bigram counts on
+    the bigram key and the unigram counts on the first-word key (both
+    8-byte hashes when the model was trained with ``hash_keys``; the
+    unigram side is vocabulary-sized and broadcasts).  Then one (id)
+    exchange for the per-doc average, rounded to 6 decimals so the
+    result is stable under distributed summation order and
+    replayable in SQL."""
     if lm.hashed:
         # replicated-model path (hashed models only — the string/SQL
-        # path keeps its historical plan): when the optimizer's own
-        # estimate says the corpus is small enough that its Heaps-law
-        # bigram table replicates safely, score locally per task
-        # instead of shuffling the exploded occurrence stream
-        try:
-            sz = (df._jdf.queryExecution().optimizedPlan().stats()
-                  .sizeInBytes())
-            est_bytes = int(sz if isinstance(sz, int) else sz.toString())
-        except Exception:
-            est_bytes = 1 << 62
-        if est_bytes <= _LM_BROADCAST_MAX_BYTES:
-            return _lm_score_replicated(df, lm, text_col, id_col)
+        # path keeps its historical plan): when the trained model fits
+        # the guard, score locally per task instead of shuffling the
+        # exploded occurrence stream
+        model_bc = _model_broadcast(lm)
+        if model_bc is not None:
+            return _lm_score_replicated(df, lm, model_bc, text_col, id_col)
         # string-free keys, mirroring the hashed train side (see
         # lm_train): no bigram strings, no per-occurrence string
         # hashing or substring_index re-extraction

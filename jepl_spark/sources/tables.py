@@ -6,11 +6,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
 #: Reads at least this big get fanned out when the scan planned fewer
 #: splits than half the cluster's cores (guide §2.5: one unsplittable
 #: file serializes every downstream projection).  Reads BELOW the
@@ -78,7 +73,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ):
         df = df.repartition(par)
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import json
 import threading
-from typing import Any, Optional
+from typing import Any
 
 from pyspark.sql.streaming import StreamingQueryListener
 

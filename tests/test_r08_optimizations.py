@@ -13,17 +13,22 @@ promised bit-identical results — these pin the promises directly.
 - the fused minhash doc pass must reproduce
   minhash_signature_from_hashes(word_shingle_hashes(...)) exactly;
 - lm_score's hashed-key path must score identically to the string
-  path.
+  path;
+- the guarded operators must give the reference output under the
+  default budget and under 0, and their guards must measure what
+  they collect; strip_boilerplate_lines' output is pinned.
 """
 
 from __future__ import annotations
 
+import logging
 import random
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from jepl_spark.operators import _guard as G
 from jepl_spark.operators import dedup as D
 from jepl_spark.operators import text as T
 
@@ -222,27 +227,41 @@ def test_fused_minhash_doc_pass_matches_signature_pipeline(spark):
     assert f == p
 
 
-def test_components_local_path_matches_iterative(spark):
+@pytest.fixture(params=["default", 0])
+def guard_path(request, monkeypatch, caplog):
+    """Budget default or 0 (any non-empty input goes distributed);
+    returns the path the guard should log to ``caplog``."""
+    caplog.set_level(logging.INFO, logger="jepl_spark.guard")
+    if request.param == "default":
+        return "local"
+    monkeypatch.setattr(G, "BUDGET_BYTES", request.param)
+    return "distributed"
+
+
+def _paths(caplog, op):
+    return [r.path for r in caplog.records
+            if r.name == "jepl_spark.guard" and r.op == op]
+
+
+def test_components_paths_match_reference(spark, guard_path, caplog):
     random.seed(9)
-    n = 400
-    edges = [(random.randrange(n), random.randrange(n))
+    edges = [(random.randrange(400), random.randrange(400))
              for _ in range(500)] + [(7, 7)]  # self-loop dropped
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    fast = sorted(tuple(r) for r in D.near_dup_components(df).collect())
-    old = D._COMPONENTS_LOCAL_MAX_EDGES
-    try:
-        D._COMPONENTS_LOCAL_MAX_EDGES = -1  # force the iterative rounds
-        slow = sorted(tuple(r) for r in
-                      D.near_dup_components(df).collect())
-    finally:
-        D._COMPONENTS_LOCAL_MAX_EDGES = old
-    assert fast == slow
-    # contract: component == smallest reachable id
-    comp = dict(fast)
+    got = sorted(tuple(r) for r in D.near_dup_components(df).collect())
+    assert _paths(caplog, "near_dup_components") == [guard_path]
+    comp: dict = {}  # reference: union-find rooted at each smallest id
+
+    def root(x):
+        while comp.setdefault(x, x) != x:
+            x = comp[x]
+        return x
+
     for a, b in edges:
-        if a != b:
-            assert comp[a] == comp[b]
-            assert comp[a] <= min(a, b)
+        ra, rb = root(a), root(b)
+        comp[max(ra, rb)] = min(ra, rb)
+    assert got == sorted({(x, root(x)) for a, b in edges if a != b
+                          for x in (a, b)})
 
 
 def test_lm_hashed_path_matches_string_path(spark):
@@ -259,38 +278,76 @@ def test_lm_hashed_path_matches_string_path(spark):
     assert rh == rs
 
 
-def test_lm_replicated_path_matches_join_path(spark):
-    """The size-guarded replicated score path (collect + broadcast the
-    hashed model, binary-search lookups in one Arrow pass) must equal
-    the exploded shuffle-join formulation row-for-row — including
-    zero-bigram docs (null/empty/one-token), a duplicated doc_id
-    (occurrences aggregate across the doc's rows in both paths), and
-    min_count pruning of the whole bigram table."""
+def test_lm_paths_match_string_path(spark, guard_path, caplog):
+    """The hashed model scores as the string model on either path and
+    is collected at most once for two scores — with zero-bigram docs
+    (null/empty/one-token), a duplicated doc_id (occurrences aggregate
+    across its rows) and min_count pruning the whole bigram table."""
     rows = [(1, "hello world hello"), (2, None), (3, ""), (4, "single"),
             (5, "a b c a b"), (5, "x y"), (6, "the cat sat the cat"),
             (7, "a a a a")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for kwargs in ({}, {"min_count": 10}, {"alpha": 2.0}):
+        caplog.clear()
         lm = T.lm_train(df, hash_keys=True, **kwargs)
-        rep = {(r.doc_id, r.n_bigrams, r.avg_logp)
+        got = {(r.doc_id, r.n_bigrams, r.avg_logp)
                for r in T.lm_score(df, lm).collect()}
-        old = T._LM_BROADCAST_MAX_BYTES
-        try:
-            T._LM_BROADCAST_MAX_BYTES = -1  # force the join path
-            join = {(r.doc_id, r.n_bigrams, r.avg_logp)
-                    for r in T.lm_score(df, lm).collect()}
-        finally:
-            T._LM_BROADCAST_MAX_BYTES = old
-        assert rep == join, kwargs
+        # a second score of the same model neither asks the guard nor
+        # collects the model again
+        assert got == {(r.doc_id, r.n_bigrams, r.avg_logp)
+                       for r in T.lm_score(df, lm).collect()}, kwargs
+        assert _paths(caplog, "lm_score") == [guard_path], kwargs
+        ref = T.lm_score(df, T.lm_train(df, **kwargs))
+        assert got == {(r.doc_id, r.n_bigrams, r.avg_logp)
+                       for r in ref.collect()}, kwargs
 
 
-def test_dedup_against_replicated_matches_join_path(spark):
-    """The replicated minhash dedup_against probe (collect + broadcast
-    the snapshot signature matrix, binary-search band postings) must
-    drop exactly the docs the banded-join formulation drops — across
-    thresholds, with the hot-bucket cap forced low enough to fire on
-    both sides, with the cap disabled, and with near-dup / exact-dup /
-    unrelated / null / empty / short delta docs."""
+def test_lm_guard_measures_model_not_scored_docs(spark, monkeypatch, caplog):
+    """A model trained on a large corpus must stay distributed when it
+    does not fit the budget, however small the frame it scores."""
+    caplog.set_level(logging.INFO, logger="jepl_spark.guard")
+    train = spark.createDataFrame(
+        [(i, " ".join(f"w{(i * 31 + k) % 997} w{k}" for k in range(40)))
+         for i in range(200)], "doc_id long, text string")
+    # a frame with plan stats (a python-list frame has none), so a
+    # guard on the scored frame's estimate would collect the model
+    delta = spark.range(1).selectExpr("id + 1 AS doc_id", "'w1 w2 w3' AS text")
+    lm = T.lm_train(train, hash_keys=True)
+    budget = 64 << 10
+    assert G.plan_bytes(delta) <= budget < 16 * (lm.table.count() + lm.vocab_size)
+    monkeypatch.setattr(G, "BUDGET_BYTES", budget)
+    got = {tuple(r) for r in T.lm_score(delta, lm).collect()}
+    assert _paths(caplog, "lm_score") == ["distributed"]
+    ref = T.lm_score(delta, T.lm_train(train))
+    assert got == {tuple(r) for r in ref.collect()}
+
+
+def _minhash_against_losers(delta, snap, threshold, cap, nh=64, bands=16):
+    """Brute force: delta ids sharing a band's hash slice with a
+    snapshot doc (buckets above ``cap`` on either side dropped) whose
+    signatures agree on ≥ threshold of the hashes."""
+    r = nh // bands
+
+    def buckets(sigs):
+        out: dict = {}
+        for i, s in enumerate(sigs):
+            for b in range(bands if s is not None else 0):
+                out.setdefault((b, tuple(s[b * r:(b + 1) * r])), []).append(i)
+        return {k: v for k, v in out.items() if cap is None or len(v) <= cap}
+
+    new = D.minhash_signature_table(delta).collect()
+    old = [row[1] for row in snap.collect()]
+    old_b = buckets(old)
+    return {new[i][0] for k, idx in buckets([row[1] for row in new]).items()
+            for i in idx for j in old_b.get(k, ())
+            if sum(x == y for x, y in zip(new[i][1], old[j])) / nh >= threshold}
+
+
+def test_dedup_against_paths_match_reference(spark, guard_path, caplog):
+    """minhash dedup_against drops what brute-force banding drops on
+    either path — across thresholds, hot-bucket caps low enough to fire
+    on both sides or disabled, and near-dup / exact-dup / unrelated /
+    null / empty / short / duplicate-id delta docs."""
     base = [
         (i, " ".join(f"w{(i * 7 + k) % 23}" for k in range(30)))
         for i in range(40)
@@ -300,49 +357,76 @@ def test_dedup_against_replicated_matches_join_path(spark):
              for i in range(12)]
     snap_df = spark.createDataFrame(base, "doc_id long, text string")
     snap = D.minhash_signature_table(snap_df)
-    delta = spark.createDataFrame(
-        [(200, base[3][1]),                      # exact dup
-         (201, base[5][1].replace("w12", "zz")), # near dup
-         (202, "totally different content phrase nothing shared"),
-         (203, None), (204, ""), (205, "tiny"),
-         (206, "common block of words here tail3"),
-         (206, base[7][1])],                     # duplicate delta id
-        "doc_id long, text string")
+    delta_rows = [
+        (200, base[3][1]),                      # exact dup
+        (201, base[5][1].replace("w12", "zz")), # near dup
+        (202, "totally different content phrase nothing shared"),
+        (203, None), (204, ""), (205, "tiny"),
+        (206, "common block of words here tail3"),
+        (206, base[7][1])]                      # duplicate delta id
+    delta = spark.createDataFrame(delta_rows, "doc_id long, text string")
     for kwargs in ({}, {"threshold": 0.5}, {"max_band_bucket": 2},
                    {"max_band_bucket": None}):
-        rep = sorted((r.doc_id, r.text) for r in
+        caplog.clear()
+        got = sorted((r.doc_id, r.text) for r in
                      D.dedup_against(delta, snap, policy="minhash",
                                      **kwargs).collect())
-        old = D._AGAINST_BROADCAST_MAX_BYTES
-        try:
-            D._AGAINST_BROADCAST_MAX_BYTES = -1  # force the join path
-            join = sorted((r.doc_id, r.text) for r in
-                          D.dedup_against(delta, snap, policy="minhash",
-                                          **kwargs).collect())
-        finally:
-            D._AGAINST_BROADCAST_MAX_BYTES = old
-        assert rep == join, kwargs
+        assert _paths(caplog, "minhash_against") == [guard_path], kwargs
+        losers = _minhash_against_losers(
+            delta, snap, kwargs.get("threshold", 0.8),
+            kwargs.get("max_band_bucket", 1000))
+        assert losers, kwargs
+        assert got == sorted(
+            (i, t) for i, t in delta_rows if i not in losers), kwargs
 
 
-def test_boilerplate_local_path_matches_join_path(spark):
-    """strip_boilerplate_lines' collected-hot-set projection must
-    rebuild exactly what the join-back + ordered-reassembly shape
-    rebuilds — within-doc duplicate lines, whitespace-padded matches,
-    blank separators, NULL/empty docs, min_line_chars screening, a
-    custom out_col, and the nothing-to-strip identity case."""
+def test_dedup_against_guard_measures_signatures(spark, monkeypatch, caplog):
+    """A delta of many short docs whose raw bytes fit the budget but
+    whose collected signatures (8 bytes per hash and band key per row)
+    do not must stay distributed."""
+    caplog.set_level(logging.INFO, logger="jepl_spark.guard")
+    delta = spark.range(400).selectExpr(
+        "id AS doc_id", "concat('d', id, ' x') AS text")
+    # both sides carry plan stats, so a raw-bytes estimate would fit
+    snap = D.minhash_signature_table(spark.sql(
+        "SELECT * FROM VALUES (10000L, 'd1 x'), (10001L, 'other words here')"
+        " AS t(doc_id, text)"))
+    budget = 64 << 10
+    assert G.plan_bytes(delta) <= budget < 400 * (64 + 16) * 8
+    monkeypatch.setattr(G, "BUDGET_BYTES", budget)
+    got = {r.doc_id for r in
+           D.dedup_against(delta, snap, policy="minhash").collect()}
+    assert _paths(caplog, "minhash_against") == ["distributed"]
+    assert got == set(range(400)) - {1}
+
+
+def test_boilerplate_strip_expected_output(spark):
+    """Within-doc duplicate lines, padding, blank lines, NULL/empty
+    text, min_line_chars, out_col and the nothing-to-strip identity;
+    rows sharing a doc_id (NULL too) are one document, merged by line
+    position."""
     rows = [(1, "keep\nSPAM\nkeep2"), (2, "SPAM\nSPAM\nother"),
             (3, None), (4, ""), (5, "\n\n"), (6, "  SPAM  \nx"),
             (7, "a\nSPAM"), (8, "z\nSPAM"), (9, "  \nq")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for kwargs in ({"max_df": 2}, {"max_df": 2, "min_line_chars": 5},
-                   {"max_df": 2, "out_col": "clean"}, {"max_df": 100}):
-        loc = sorted(tuple(r) for r in
+    stripped = [(1, "keep\nkeep2"), (2, "other"), (3, None), (4, ""),
+                (5, "\n\n"), (6, "x"), (7, "a"), (8, "z"), (9, "  \nq")]
+    for kwargs, want in (
+        ({"max_df": 2}, stripped),
+        # "SPAM" is shorter than 5 chars: never evidence, never stripped
+        ({"max_df": 2, "min_line_chars": 5}, rows),
+        ({"max_df": 2, "out_col": "clean"},
+         [r + (c,) for r, (_, c) in zip(rows, stripped)]),
+        ({"max_df": 100}, rows),
+    ):
+        got = sorted(tuple(r) for r in
                      T.strip_boilerplate_lines(df, **kwargs).collect())
-        old = T._BOILERPLATE_LOCAL_MAX_LINES
-        try:
-            T._BOILERPLATE_LOCAL_MAX_LINES = -1  # force the join path
-            join = sorted(tuple(r) for r in
-                          T.strip_boilerplate_lines(df, **kwargs).collect())
-        finally:
-            T._BOILERPLATE_LOCAL_MAX_LINES = old
-        assert loc == join, kwargs
+        assert got == want, kwargs
+    dup = spark.createDataFrame(
+        [(10, "HDR\nshared"), (10, "shared\nSPAM"), (11, "shared"),
+         (12, "SPAM"), (None, "SPAM\nend")], "doc_id long, text string")
+    got = sorted((tuple(r) for r in
+                  T.strip_boilerplate_lines(dup, max_df=2).collect()), key=repr)
+    # "shared" is in two documents (10 counts once), "SPAM" in three
+    assert got == [(10, "HDR\nshared\nshared"), (10, "HDR\nshared\nshared"),
+                   (11, "shared"), (12, ""), (None, "end")]
