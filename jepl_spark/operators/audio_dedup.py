@@ -156,20 +156,23 @@ def _blocked(
     dur_tol_ms: int,
     side: str,
     with_sr: bool = True,
+    fp_cols: tuple = ("__fp",),
 ) -> DataFrame:
     """(sr, bucket) blocking keys for one side: every row lands in its
     own duration bucket AND the next one, so any pair within
     ``dur_tol_ms`` shares at least one (sr, bucket) cell.
     ``with_sr=False`` (the canonical-rate cross-sr lane) collapses the
     sr key to a constant — duration is the only block key, since a
-    resampled copy changes sr_hz but preserves wall-clock duration."""
+    resampled copy changes sr_hz but preserves wall-clock duration.
+    Each fingerprint column ``c`` of ``fp_cols`` comes out as
+    ``c_<side>``."""
     b = (F.col("dur_ms") / F.lit(dur_tol_ms)).cast("long")
     sr_key = F.col("sr_hz") if with_sr else F.lit(0)
     return fps.select(
         F.col(id_col).alias(f"id_{side}"),
         sr_key.alias("__sr"),
         F.col("dur_ms").alias(f"__dur_{side}"),
-        F.col("__fp").alias(f"__fp_{side}"),
+        *[F.col(c).alias(f"{c}_{side}") for c in fp_cols],
         F.explode(F.array(b, b + 1)).alias("__bucket"),
     )
 
@@ -350,14 +353,8 @@ def audio_trim_near_dups(
     )
 
     def _side(s: str) -> DataFrame:
-        b = (F.col("dur_ms") / F.lit(max_trim_ms)).cast("long")
-        return fps.select(
-            F.col(id_col).alias(f"id_{s}"),
-            F.col("dur_ms").alias(f"__dur_{s}"),
-            F.col("__h").alias(f"__h_{s}"),
-            F.col("__t").alias(f"__t_{s}"),
-            F.explode(F.array(b, b + 1)).alias("__bucket"),
-        )
+        return _blocked(fps, id_col, max_trim_ms, s, with_sr=False,
+                        fp_cols=("__h", "__t"))
 
     ham = F.least(
         fp_hamming(F.col("__h_a"), F.col("__h_b")),
@@ -365,7 +362,7 @@ def audio_trim_near_dups(
     )
     return (
         _side("a")
-        .join(_side("b"), ["__bucket"])
+        .join(_side("b"), ["__sr", "__bucket"])
         .where(
             (F.col("id_a") < F.col("id_b"))
             & (
@@ -747,20 +744,13 @@ def stream_audio_trim_near_dedup(
     )
 
     def _sides(fps: DataFrame, side: str) -> DataFrame:
-        b = (F.col("dur_ms") / F.lit(max_trim_ms)).cast("long")
-        return fps.select(
-            F.col(id_col).alias(f"id_{side}"),
-            F.lit(0).alias("__sr"),
-            F.col("dur_ms").alias(f"__dur_{side}"),
-            F.col("fp_head").alias(f"__h_{side}"),
-            F.col("fp_tail").alias(f"__t_{side}"),
-            F.explode(F.array(b, b + 1)).alias("__bucket"),
-        )
+        return _blocked(fps, id_col, max_trim_ms, side, with_sr=False,
+                        fp_cols=("fp_head", "fp_tail"))
 
     def _qualifying(a: DataFrame, b: DataFrame) -> DataFrame:
         ham = F.least(
-            fp_hamming(F.col("__h_a"), F.col("__h_b")),
-            fp_hamming(F.col("__t_a"), F.col("__t_b")),
+            fp_hamming(F.col("fp_head_a"), F.col("fp_head_b")),
+            fp_hamming(F.col("fp_tail_a"), F.col("fp_tail_b")),
         )
         return (
             a.join(b, ["__sr", "__bucket"])

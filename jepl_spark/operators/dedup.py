@@ -14,7 +14,7 @@ Scale design:
   ``max_band_bucket`` before the pair join.
 - SimHash: per-row 64-bit signature; near-dup = same signature (or
   banded prefixes for Hamming>0 search).
-- n-gram Jaccard: inverted-index self-join on shingles with a document
+- n-gram Jaccard: inverted index over shingle hashes with a document
   frequency cap to drop stop-shingles (the classic blowup control).
 """
 
@@ -1047,6 +1047,62 @@ def minhash_candidates(
     return out
 
 
+def _long_ids(df: DataFrame, cols: tuple, lazy: bool = False):
+    """Map the id columns ``cols`` of ``df`` to one ORDER-PRESERVING
+    long surrogate, for pair operators whose id paths pack, compare and
+    propagate longs.  Returns ``(df', back)``: ``df'`` carries the
+    surrogates in place of the ids, and ``back(out, *out_cols)`` maps
+    the named surrogate columns of a result back to the ids.  Integral
+    ids (byte/short/int/long) return ``df`` as is, and ``back`` is the
+    identity.
+
+    The surrogate tags the distinct non-null ids, sorted, with
+    ``monotonically_increasing_id``: a range-partitioned sort keeps id
+    order across partitions (the partition index is the tag's high
+    bits), so a smaller surrogate always means a smaller id and ``<``
+    or ``min`` on surrogates answers for the ids.  An eager
+    localCheckpoint freezes it, so every consumer joins ONE assignment.
+    Ids map in by a LEFT join: a null id keeps a null surrogate and its
+    row still counts (e.g. toward a shingle's document frequency).
+    ``lazy=True`` (a side-effect-free plan) raises for non-integral
+    ids, whose surrogate needs that eager checkpoint."""
+    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+
+    integral = (ByteType, ShortType, IntegerType, LongType)
+    if all(isinstance(df.schema[c].dataType, integral) for c in cols):
+        return df, lambda out, *out_cols: out
+    if lazy:
+        raise ValueError(
+            "materialize=False needs integral ids: non-integral ids map "
+            "through a long surrogate frozen by an eager localCheckpoint"
+        )
+    oids = df.select(F.col(cols[0]).alias("__oid"))
+    for c in cols[1:]:
+        oids = oids.unionByName(df.select(F.col(c).alias("__oid")))
+    mapping = (
+        oids.where(F.col("__oid").isNotNull())
+        .distinct()
+        .orderBy("__oid")
+        .withColumn("__sid", F.monotonically_increasing_id())
+        .localCheckpoint(eager=True)
+    )
+
+    def _swap(frame: DataFrame, c: str, key: str, val: str, how: str):
+        m = mapping.select(F.col(key).alias(c), F.col(val).alias("__v"))
+        return frame.join(m, c, how).withColumn(c, F.col("__v")).drop("__v")
+
+    for c in cols:
+        df = _swap(df, c, "__oid", "__sid", "left")
+
+    def back(out: DataFrame, *out_cols: str) -> DataFrame:
+        names = out.columns
+        for c in out_cols:
+            out = _swap(out, c, "__sid", "__oid", "inner")
+        return out.select(*names)
+
+    return df, back
+
+
 def near_dup_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -1068,12 +1124,11 @@ def near_dup_components(
 
     Id types: integral ids (byte/short/int/long) propagate directly
     (labels ARE ids).  Any other id type — string/UUID, decimal,
-    float — is remapped through a collision-free long surrogate
-    (``monotonically_increasing_id`` over the distinct ids, frozen by
-    an eager localCheckpoint so every consumer sees ONE assignment),
-    propagated, then mapped back with ``component`` recomputed as the
-    MINIMUM ORIGINAL id of each cluster (lexicographic for strings) —
-    so the "smallest reachable id" contract holds for every id type.
+    float — propagates on its order-preserving long surrogate
+    (:func:`_long_ids`) and both ``id`` and ``component`` map back:
+    the smallest surrogate IS the smallest original id (lexicographic
+    for strings), so the "smallest reachable id" contract holds for
+    every id type.
 
     Algorithm: iterative min-label propagation with pointer jumping
     (label(x) ← min over neighbors' labels, then ``jumps`` rounds of
@@ -1088,19 +1143,12 @@ def near_dup_components(
     """
     if jumps < 1:
         raise ValueError(f"jumps must be >= 1, got {jumps}")
-    from pyspark.sql.types import (
-        ByteType, IntegerType, LongType, ShortType,
-    )
-
-    integral = (ByteType, ShortType, IntegerType, LongType)
-    dtypes = {f.name: f.dataType for f in pairs.schema.fields}
     for c in (id_a, id_b):
-        if c not in dtypes:
+        if c not in pairs.columns:
             raise ValueError(
-                f"pair column {c!r} not in input columns {list(dtypes)}"
+                f"pair column {c!r} not in input columns {pairs.columns}"
             )
-    if not all(isinstance(dtypes[c], integral) for c in (id_a, id_b)):
-        return _components_remapped(pairs, id_a, id_b, max_rounds, jumps)
+    pairs, back = _long_ids(pairs, (id_a, id_b))
     edges = (
         pairs.select(
             F.col(id_a).cast("long").alias("src"),
@@ -1127,7 +1175,7 @@ def near_dup_components(
     # collapse to one job.  Larger graphs keep the iterative ids-only
     # rounds below.
     if fits("near_dup_components", 16 * edges.count()):
-        return _components_local(edges)
+        return back(_components_local(edges), "id", "component")
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -1183,7 +1231,7 @@ def near_dup_components(
         new_sum = _label_sum(jumped)
         labels = jumped
         if new_sum == prev_sum:
-            return labels.select("id", "component")
+            return back(labels.select("id", "component"), "id", "component")
         prev_sum = new_sum
     raise RuntimeError(
         f"near_dup_components did not converge in {max_rounds} rounds — "
@@ -1247,52 +1295,6 @@ def _components_local(edges: DataFrame) -> DataFrame:
     ).localCheckpoint(eager=True)
     bc.unpersist()
     return out
-
-
-def _components_remapped(
-    pairs: DataFrame, id_a: str, id_b: str, max_rounds: int, jumps: int
-) -> DataFrame:
-    """near_dup_components for NON-integral id types: remap ids through
-    a collision-free long surrogate, propagate on the surrogates (they
-    carry no order — only connectivity matters), then map back and
-    recompute each cluster's representative as the minimum ORIGINAL id.
-    The surrogate assignment is frozen by an eager localCheckpoint so
-    every downstream consumer joins against ONE assignment (a lazy
-    monotonically_increasing_id re-evaluates per consumer).  Two extra
-    ids-only joins + one groupBy vs the integral fast path — all over
-    the (thresholded, tiny-vs-corpus) pair graph's node set."""
-    ids = (
-        pairs.select(F.col(id_a).alias("__oid"))
-        .unionByName(pairs.select(F.col(id_b).alias("__oid")))
-        .where(F.col("__oid").isNotNull())
-        .distinct()
-    )
-    mapping = ids.withColumn(
-        "__sid", F.monotonically_increasing_id()
-    ).localCheckpoint(eager=True)
-    m_a = mapping.select(
-        F.col("__oid").alias("__a"), F.col("__sid").alias("id_a")
-    )
-    m_b = mapping.select(
-        F.col("__oid").alias("__b"), F.col("__sid").alias("id_b")
-    )
-    sedges = (
-        pairs.select(F.col(id_a).alias("__a"), F.col(id_b).alias("__b"))
-        .where(F.col("__a").isNotNull() & F.col("__b").isNotNull())
-        .join(m_a, "__a")
-        .join(m_b, "__b")
-        .select("id_a", "id_b")
-    )
-    labels = near_dup_components(
-        sedges, "id_a", "id_b", max_rounds=max_rounds, jumps=jumps
-    )
-    orig = labels.join(
-        mapping.select(F.col("__sid").alias("id"), "__oid"), "id"
-    ).select(F.col("__oid").alias("id"), "component")
-    reps = orig.groupBy("component").agg(F.min("id").alias("__rep"))
-    return orig.join(reps, "component").select(
-        "id", F.col("__rep").alias("component")
-    )
 
 
 def minhash_dedup(
@@ -1874,9 +1876,9 @@ def ngram_jaccard_pairs(
     become likely; per-pair intersection counts are additionally
     oracle-checked by the ngram_jaccard_pairs gate.
 
-    Shape (integral ids): when the per-doc shingle table fits the
-    guard, it is collected and broadcast once and each task counts the
-    complete pairs of its slice of ids.  Otherwise TWO exchanges:
+    Shape: when the per-doc shingle table fits the guard, it is
+    collected and broadcast once and each task counts the complete
+    pairs of its slice of ids.  Otherwise TWO exchanges:
     postings ``(id, set_size, shingle)`` partition by shingle, where an
     Arrow stage applies the df cap and emits co-occurrence rows by
     numpy index arithmetic; those partition by pair, where a second
@@ -1884,101 +1886,11 @@ def ngram_jaccard_pairs(
     computes jaccard = c/(na+nb−c) in IEEE doubles (bit-identical to
     the JVM division) and emits ONLY the pairs ≥ ``min_jaccard`` —
     316 s → 21 s at sf1.0 against a join+groupBy formulation.
-    Non-integral ids (string/UUID) keep that join formulation (numpy
-    pair packing needs a total order identical to Spark's, which only
-    integral types guarantee)."""
-    from pyspark.sql.types import (
-        ByteType, IntegerType, LongType, ShortType,
-    )
-
-    id_type = df.schema[id_col].dataType
-    if isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
-        return _ngram_jaccard_pairs_arrow(
-            df, text_col, id_col, shingle_n, min_jaccard,
-            max_shingle_df, materialize,
-        )
-    base = df.select(
-        F.col(id_col).alias("__id"),
-        word_shingle_hashes(F.col(text_col), shingle_n).alias("__sh"),
-    ).select(
-        "__id",
-        F.size("__sh").alias("__n"),
-        F.explode("__sh").alias("__s"),
-    )
-    # The exploded index feeds four consumers (df-count + join probe +
-    # both self-join sides); without a persist the shingling expression
-    # (regexp + split + slices + distinct) re-executes per consumer —
-    # measured ~2× the whole operator's wall at sf0.1.  The persisted
-    # shape is (long, int, long) — a fraction of the text it came from
-    # — and is released before returning (result is materialized).
-    if materialize:
-        base = base.persist()
-
-    shingle_df = base.groupBy("__s").agg(F.count(F.lit(1)).alias("__df"))
-    pruned = base.join(
-        shingle_df.filter(F.col("__df") <= max_shingle_df), on="__s", how="inner"
-    )
-
-    # Self-join carries ONLY (shingle, id): per-doc set sizes would be
-    # dead weight through the largest shuffle of the plan — they are
-    # broadcast-joined onto the (much smaller) aggregated pair counts
-    # instead.
-    a = pruned.select(F.col("__s"), F.col("__id").alias("id_a"))
-    b = pruned.select(F.col("__s"), F.col("__id").alias("id_b"))
-    common = (
-        a.join(b, on="__s", how="inner")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("__common"))
-    )
-    # No broadcast HINT on sizes: one row per doc, so at billions of
-    # docs it must stay a shuffle join of two already-small tables —
-    # AQE auto-broadcasts when it actually fits.
-    sizes = base.groupBy("__id").agg(F.first("__n").alias("__n"))
-    common = common.join(
-        sizes.select(F.col("__id").alias("id_a"), F.col("__n").alias("__na")),
-        "id_a",
-    ).join(
-        sizes.select(F.col("__id").alias("id_b"), F.col("__n").alias("__nb")),
-        "id_b",
-    )
-    jac = F.col("__common") / (F.col("__na") + F.col("__nb") - F.col("__common"))
-    out = common.select(
-        "id_a", "id_b", jac.alias("jaccard")
-    ).filter(F.col("jaccard") >= min_jaccard)
-    if materialize:
-        out = out.localCheckpoint(eager=True)  # tiny: thresholded pairs
-        base.unpersist()
-    return out
-
-
-def _ngram_jaccard_pairs_arrow(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_n: int,
-    min_jaccard: float,
-    max_shingle_df: int,
-    materialize: bool,
-) -> DataFrame:
-    """Integral-id fast path of :func:`ngram_jaccard_pairs` — see its
-    docstring for the two-exchange shape and the measured numbers.
-    Semantics are identical to the join formulation, boundary cases
-    included: the df cap counts ALL postings of a shingle (null-id
-    rows inflate a shingle's df exactly as the old groupBy did), while
-    pair generation skips null ids and equal-id posting pairs (the old
-    ``id_a < id_b`` strictness)."""
-    import numpy as np
-    import pyarrow as pa
-
-    from pyspark.sql.types import (
-        DoubleType, StructField, StructType,
-    )
-
-    id_type = df.schema[id_col].dataType
-    cap = int(max_shingle_df)
-    thresh = float(min_jaccard)
-
+    Non-integral ids (string/UUID, decimal, float) run the same two
+    paths on their order-preserving long surrogate
+    (:func:`_long_ids`), and the thresholded pairs map back by two
+    small joins; that surrogate is an eager checkpoint, so
+    ``materialize=False`` raises ValueError for them."""
     # Replicated-index path (guide §3.1/§8: broadcast the small side,
     # never shuffle the heavy intermediate): when the per-doc shingle
     # table fits the guard, it collects, broadcasts once, and every
@@ -1993,14 +1905,44 @@ def _ngram_jaccard_pairs_arrow(
     # most ~B/2 shingles of 8 bytes each.  That bound is only as good
     # as the estimate, which for a file scan is the on-disk (possibly
     # compressed) size of the text; unknown stats keep the exchange
-    # path below, which streams any corpus size.
+    # path, which streams any corpus size.  It measures the caller's
+    # frame, before any id mapping.
     # (materialize=False keeps the lazy exchange plan: the replicated
     # path collects the index at call time, which the side-effect-free
     # plan-audit contract forbids.)
-    if materialize and fits("ngram_jaccard_pairs", 4 * plan_bytes(df)):
-        return _ngram_jaccard_pairs_replicated(
-            df, text_col, id_col, shingle_n, thresh, cap, id_type,
-        )
+    replicated = materialize and fits(
+        "ngram_jaccard_pairs", 4 * plan_bytes(df))
+    df, back = _long_ids(df, (id_col,), lazy=not materialize)
+    args = (df, text_col, id_col, shingle_n, float(min_jaccard),
+            int(max_shingle_df))
+    out = (_ngram_jaccard_pairs_replicated(*args) if replicated
+           else _ngram_jaccard_pairs_arrow(*args, materialize))
+    return back(out, "id_a", "id_b")
+
+
+def _ngram_jaccard_pairs_arrow(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_n: int,
+    thresh: float,
+    cap: int,
+    materialize: bool,
+) -> DataFrame:
+    """Exchange path of :func:`ngram_jaccard_pairs` over integral ids —
+    see its docstring for the two-exchange shape and the measured
+    numbers.  Boundary cases match the brute-force definition: the df
+    cap counts ALL postings of a shingle (null-id rows inflate a
+    shingle's df), while pair generation skips null ids and equal-id
+    posting pairs (``id_a < id_b`` strictly)."""
+    import numpy as np
+    import pyarrow as pa
+
+    from pyspark.sql.types import (
+        DoubleType, StructField, StructType,
+    )
+
+    id_type = df.schema[id_col].dataType
 
     postings = df.select(
         F.col(id_col).alias("__id"),
@@ -2152,21 +2094,21 @@ def _ngram_jaccard_pairs_replicated(
     shingle_n: int,
     thresh: float,
     cap: int,
-    id_type,
 ) -> DataFrame:
-    """Replicated-index path of :func:`ngram_jaccard_pairs`, for a
-    shingle table that fits the guard: one collect of the per-doc
-    shingle hashes, one broadcast, and P tasks each owning the slice
-    ``H(id_a) % P`` of smaller-endpoint ids.  Postings sort by
-    (shingle, id), so every co-occurrence of a pair is generated in
-    its owner's task: local counts are complete and the threshold
-    applies before anything leaves the task.  The math is the
-    exchange path's."""
+    """Replicated-index path of :func:`ngram_jaccard_pairs` over
+    integral ids, for a shingle table that fits the guard: one collect
+    of the per-doc shingle hashes, one broadcast, and P tasks each
+    owning the slice ``H(id_a) % P`` of smaller-endpoint ids.  Postings
+    sort by (shingle, id), so every co-occurrence of a pair is
+    generated in its owner's task: local counts are complete and the
+    threshold applies before anything leaves the task.  The math is
+    the exchange path's."""
     import numpy as np
     import pyarrow as pa
 
     from pyspark.sql.types import DoubleType, StructField, StructType
 
+    id_type = df.schema[id_col].dataType
     spark = df.sparkSession
     per_doc = df.select(
         F.col(id_col).alias("__id"),

@@ -6,7 +6,7 @@ promised bit-identical results — these pin the promises directly.
   window chains and minhash band keys rest on;
 - ngram_jaccard_pairs' replicated-index and exchange paths must agree
   with each other and with a brute-force reference, boundary cases
-  included;
+  included, for long and string ids;
 - Myers' bit-parallel WER distance must equal the quadratic DP;
 - batch winnowing must equal the per-row formulation on every length
   class;
@@ -94,20 +94,33 @@ def _brute_jaccard_pairs(rows, n, min_j, cap):
     return sorted(out)
 
 
+NGRAM_ROWS = [
+    (1, "a b c d e f g"),
+    (2, "a b c d e f g"),
+    (3, "a b c d x y z"),
+    (None, "a b c d e f g"),   # null id: df counts yes, pairs no
+    (4, "a b"),                # shorter than n
+    (5, ""),                   # empty -> [""] singleton shingle
+    (6, "q r s t u v w"),
+    (7, None),                 # null text -> no postings
+    (8, "A B c D e f g"),      # case folding
+]
+
+
+def _values_frame(spark, rows, id_type):
+    """(doc_id, text) rows as an inline VALUES table: unlike a
+    python-list frame it has plan stats, so the ngram guard can pick
+    the replicated path."""
+    vals = ", ".join(
+        "(" + ", ".join("NULL" if v is None else repr(v) for v in r) + ")"
+        for r in rows)
+    return spark.sql(f"SELECT CAST(doc_id AS {id_type}) AS doc_id, text "
+                     f"FROM VALUES {vals} AS t(doc_id, text)")
+
+
 @pytest.mark.parametrize("cap,min_j", [(1000, 0.1), (2, 0.1), (1000, 0.0)])
 def test_ngram_paths_agree_and_match_reference(spark, cap, min_j):
-    rows = [
-        (1, "a b c d e f g"),
-        (2, "a b c d e f g"),
-        (3, "a b c d x y z"),
-        (None, "a b c d e f g"),   # null id: df counts yes, pairs no
-        (4, "a b"),                # shorter than n
-        (5, ""),                   # empty -> [""] singleton shingle
-        (6, "q r s t u v w"),
-        (7, None),                 # null text -> no postings
-        (8, "A B c D e f g"),      # case folding
-    ]
-    tiny = spark.createDataFrame(rows, "doc_id long, text string")
+    tiny = _values_frame(spark, NGRAM_ROWS, "long")
     rep = sorted(
         tuple(r) for r in D.ngram_jaccard_pairs(
             tiny, min_jaccard=min_j, max_shingle_df=cap).collect()
@@ -118,20 +131,30 @@ def test_ngram_paths_agree_and_match_reference(spark, cap, min_j):
             materialize=False).collect()
     )
     assert rep == exc
-    ref = _brute_jaccard_pairs(
-        [(r[0], r[1]) for r in rows], 3, min_j, cap)
+    ref = _brute_jaccard_pairs(NGRAM_ROWS, 3, min_j, cap)
     assert [(a, b) for a, b, _ in ref] == [(a, b) for a, b, _ in rep]
     for (_, _, jref), (_, _, jgot) in zip(ref, rep):
         assert jref == jgot
 
 
-def test_ngram_string_ids_take_exchange_path(spark):
-    # non-integral ids must keep the join formulation and still work
-    rows = [("x", "a b c d"), ("y", "a b c d"), ("z", "p q r s")]
-    df = spark.createDataFrame(rows, "doc_id string, text string")
-    got = sorted(tuple(r) for r in
-                 D.ngram_jaccard_pairs(df, min_jaccard=0.5).collect())
-    assert got == [("x", "y", 1.0)]
+def test_ngram_string_ids_match_reference(spark, guard_path, caplog):
+    """String ids whose order is not their numeric order ("13" < "6")
+    give the reference pairs and log the guard path of the same rows'
+    long ids; the null id still counts toward a shingle's df (at cap 3
+    it drops the shingles docs 1, 2 and 8 share).  The lazy plan needs
+    integral ids."""
+    srows = [(None if i is None else str(i + 5), t) for i, t in NGRAM_ROWS]
+    longs = _values_frame(spark, NGRAM_ROWS, "long")
+    strs = _values_frame(spark, srows, "string")
+    for cap, min_j in ((1000, 0.1), (3, 0.1), (1000, 0.0)):
+        caplog.clear()
+        D.ngram_jaccard_pairs(longs, min_jaccard=min_j, max_shingle_df=cap)
+        got = sorted(tuple(r) for r in D.ngram_jaccard_pairs(
+            strs, min_jaccard=min_j, max_shingle_df=cap).collect())
+        assert _paths(caplog, "ngram_jaccard_pairs") == [guard_path] * 2
+        assert got == _brute_jaccard_pairs(srows, 3, min_j, cap), cap
+    with pytest.raises(ValueError, match="materialize=False"):
+        D.ngram_jaccard_pairs(strs, materialize=False)
 
 
 def test_myers_wer_matches_reference_dp(spark):
@@ -243,12 +266,23 @@ def _paths(caplog, op):
             if r.name == "jepl_spark.guard" and r.op == op]
 
 
-def test_components_paths_match_reference(spark, guard_path, caplog):
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_components_paths_match_reference(spark, guard_path, caplog,
+                                          id_type):
+    """~680 distinct ids; as strings their order is not the numeric
+    one ("10" < "9"), so the labels check that the surrogate keeps
+    string order across the sort's range partitions."""
     random.seed(9)
-    edges = [(random.randrange(400), random.randrange(400))
-             for _ in range(500)] + [(7, 7)]  # self-loop dropped
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = sorted(tuple(r) for r in D.near_dup_components(df).collect())
+    cast = int if id_type == "long" else str
+    edges = [(cast(random.randrange(1000)), cast(random.randrange(1000)))
+             for _ in range(600)] + [(cast(7), cast(7))]  # self-loop dropped
+    df = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+    # AQE would coalesce the small sort into one partition
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        got = sorted(tuple(r) for r in D.near_dup_components(df).collect())
+    finally:
+        spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
     assert _paths(caplog, "near_dup_components") == [guard_path]
     comp: dict = {}  # reference: union-find rooted at each smallest id
 
