@@ -172,19 +172,13 @@ def _minhash_against_losers_replicated(
     def collect_side(sigs: DataFrame, with_ids: bool):
         cols = [id_col, sig_col] if with_ids else [sig_col]
         tbl = sigs.select(*cols).toArrow()
-        col = tbl.column(sig_col).combine_chunks()
-        flat = col.flatten().to_numpy().astype(np.int64, copy=False)
+        flat, _, valid = _ragged(tbl.column(sig_col))
         mat = flat.reshape(-1, num_hashes)
         ids = None
         if with_ids:
-            ids = tbl.column(id_col).to_pylist()
-            if col.null_count:
-                live = ~np.asarray(col.is_null())
-                ids = [v for v, ok in zip(ids, live) if ok]
-        keys = (_np_band_key_matrix(
-            np.ascontiguousarray(mat).view(np.uint64), bands, rows)
-            if mat.shape[0] else np.empty((0, bands), dtype=np.int64))
-        return mat, keys, ids
+            ids = [v for v, ok in zip(tbl.column(id_col).to_pylist(), valid)
+                   if ok]
+        return mat, _np_band_key_matrix(mat, bands, rows), ids
 
     old_mat, old_keys, _ = collect_side(old_sigs, with_ids=False)
     new_mat, new_keys, new_ids = collect_side(new_sigs, with_ids=True)
@@ -506,17 +500,100 @@ def _np_chain(H, levels: int):
     """The k−1 chain-combine levels over a CONCATENATED token-hash
     array: C[i] ← xxhash64(C[i], H[i+j]) per level j.  Row boundaries
     need no masking — positions whose window would cross into the next
-    row are discarded by the caller's per-row slice (level j only
-    reaches j ≤ k−1 past a window start, which stays inside the row
-    for every KEPT start)."""
+    row are discarded by ``_np_windows`` (level j only reaches j ≤ k−1
+    past a window start, which stays inside the row for every KEPT
+    start; levels past the array's end have no kept start)."""
     import numpy as np
 
     C = H.copy()
     with np.errstate(over="ignore"):
-        for j in range(1, levels):
+        for j in range(1, min(levels, H.size)):
             s = _np_hash_long(C[: H.size - j], np.uint64(42))
             C[: H.size - j] = _np_hash_long(H[j:], s)
     return C
+
+
+# -- the Arrow ragged-array kernel -------------------------------------------
+#
+# Every shingle-based operator crosses to Python with one per-document
+# ``array<long>`` (token hashes or a signature).  ``_ragged`` unpacks
+# an Arrow batch of those into one flat array plus per-row lengths,
+# each kernel step below is one numpy function over (flat, lens), and
+# ``_pack`` hands the result back as an Arrow list array: no per-row
+# Python on either side of the boundary.
+
+
+def _ragged(lists):
+    """Arrow integer-list array (or chunked array) → ``(flat uint64,
+    lens int64, valid bool)``: the concatenated values of the rows as
+    64-bit words, each row's length (0 for a NULL row, whose values
+    ``flatten`` skips) and its validity."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(lists, pa.ChunkedArray):
+        lists = lists.combine_chunks()
+    flat = lists.flatten().to_numpy(zero_copy_only=False)
+    lens = pc.fill_null(pc.list_value_length(lists), 0)
+    return (flat.astype(np.int64, copy=False).view(np.uint64),
+            lens.to_numpy(zero_copy_only=False).astype(np.int64),
+            lists.is_valid().to_numpy(zero_copy_only=False))
+
+
+def _pack(values, lens, valid):
+    """The inverse of ``_ragged``: an Arrow ``list<long>`` array whose
+    row i holds the next ``lens[i]`` of ``values`` (raveled, any 64-bit
+    integer dtype); rows with ``valid`` False are NULL and hold none."""
+    import numpy as np
+    import pyarrow as pa
+
+    offsets = np.zeros(lens.size + 1, dtype=np.int32)
+    np.cumsum(lens, out=offsets[1:])
+    return pa.ListArray.from_arrays(
+        offsets, np.ravel(values).view(np.int64), mask=pa.array(~valid))
+
+
+def _np_windows(C, lens, k: int):
+    """Window slice of a chained ragged array: row i keeps its first
+    max(lens[i] − k + 1, 0) positions, the starts whose chain stayed
+    inside the row.  Returns (values, lens)."""
+    import numpy as np
+
+    out = np.maximum(lens - (k - 1), 0)
+    pos = np.arange(C.size) - np.repeat(np.cumsum(lens) - lens, lens)
+    return C[pos < np.repeat(out, lens)], out
+
+
+def _np_distinct(vals, lens):
+    """Per-row distinct values in first-occurrence order.  A lexsort by
+    (row, value) is stable, so each run's head is the first occurrence;
+    keeping the heads in array order keeps that order.  Returns
+    (values, lens)."""
+    import numpy as np
+
+    row = np.repeat(np.arange(lens.size), lens)
+    order = np.lexsort((vals, row))
+    sv, sr = vals[order], row[order]
+    head = np.ones(vals.size, dtype=bool)
+    head[1:] = (sv[1:] != sv[:-1]) | (sr[1:] != sr[:-1])
+    keep = np.zeros(vals.size, dtype=bool)
+    keep[order[head]] = True
+    return vals[keep], np.bincount(row[keep], minlength=lens.size)
+
+
+def _np_shingles(th, fb, n: int):
+    """Arrow token hashes + fallback hashes → ragged ``(values, lens,
+    valid)`` distinct shingle hashes: chain, window slice, per-row
+    distinct, and the one fallback hash for a row shorter than n."""
+    import numpy as np
+
+    H, lens, valid = _ragged(th)
+    vals, cnt = _np_distinct(*_np_windows(_np_chain(H, n), lens, n))
+    short = valid & (lens < n)  # no windows: cnt is 0
+    fb = fb.to_numpy(zero_copy_only=False).view(np.uint64)
+    vals = np.insert(vals, (np.cumsum(cnt) - cnt)[short], fb[short])
+    return vals, cnt + short, valid
 
 
 def _token_hashes(toks: Column) -> Column:
@@ -526,97 +603,27 @@ def _token_hashes(toks: Column) -> Column:
 
 
 def _shingle_chain_udf(n: int):
-    """pandas UDF: (token_hashes array<long>, fallback long) →
-    distinct shingle hashes, first-occurrence order — the numpy half
-    of ``word_shingle_hashes``."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    """Arrow UDF: (token_hashes array<long>, fallback long) → distinct
+    shingle hashes, first-occurrence order — the numpy half of
+    ``word_shingle_hashes``."""
+    from pyspark.sql.functions import arrow_udf
 
-    def _f(th_s, fb_s):
-        n_rows = len(th_s)
-        lens = np.empty(n_rows, dtype=np.int64)
-        pieces = []
-        for i in range(n_rows):
-            a = th_s.iloc[i]
-            if a is None:
-                lens[i] = -1
-                continue
-            aa = np.asarray(a, dtype=np.int64)
-            lens[i] = aa.size
-            if aa.size >= n:
-                pieces.append(aa)
-        C = None
-        if pieces:
-            C = _np_chain(
-                np.ascontiguousarray(np.concatenate(pieces)).view(
-                    np.uint64),
-                n,
-            ).view(np.int64)
-        out = [None] * n_rows
-        o = 0
-        fb = fb_s.to_numpy()
-        for i in range(n_rows):
-            L = lens[i]
-            if L < 0:
-                continue
-            if L < n:
-                out[i] = np.array([fb[i]], dtype=np.int64)
-                continue
-            seg = C[o:o + L - (n - 1)]
-            o += L
-            _, idx = np.unique(seg, return_index=True)
-            out[i] = seg[np.sort(idx)]
-        return pd.Series(out, dtype="object")
+    def _f(th, fb):
+        return _pack(*_np_shingles(th, fb, n))
 
-    _f.__annotations__ = {"th_s": pd.Series, "fb_s": pd.Series,
-                          "return": pd.Series}
-    return pandas_udf(_f, "array<long>")
+    return arrow_udf(_f, "array<long>")
 
 
 def _window_chain_udf(k: int):
-    """pandas UDF: token_hashes → positional window hashes (the numpy
+    """Arrow UDF: token_hashes → positional window hashes (the numpy
     half of ``window_hash_positions``; no distinct, no fallback)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
-    def _f(th_s):
-        n_rows = len(th_s)
-        lens = np.empty(n_rows, dtype=np.int64)
-        pieces = []
-        for i in range(n_rows):
-            a = th_s.iloc[i]
-            if a is None:
-                lens[i] = -1
-                continue
-            aa = np.asarray(a, dtype=np.int64)
-            lens[i] = aa.size
-            if aa.size >= k:
-                pieces.append(aa)
-        C = None
-        if pieces:
-            C = _np_chain(
-                np.ascontiguousarray(np.concatenate(pieces)).view(
-                    np.uint64),
-                k,
-            ).view(np.int64)
-        empty = np.empty(0, dtype=np.int64)
-        out = [None] * n_rows
-        o = 0
-        for i in range(n_rows):
-            L = lens[i]
-            if L < 0:
-                continue
-            if L < k:
-                out[i] = empty
-                continue
-            out[i] = C[o:o + L - (k - 1)]
-            o += L
-        return pd.Series(out, dtype="object")
+    def _f(th):
+        H, lens, valid = _ragged(th)
+        return _pack(*_np_windows(_np_chain(H, k), lens, k), valid)
 
-    _f.__annotations__ = {"th_s": pd.Series, "return": pd.Series}
-    return pandas_udf(_f, "array<long>")
+    return arrow_udf(_f, "array<long>")
 
 
 def _norm_tokens(text: Column) -> Column:
@@ -732,90 +739,57 @@ def _minhash_coeffs(num_hashes: int, seed: int = 0x9E3779B9) -> tuple[list[int],
     return a, b
 
 
+def _np_signature(H, lens, num_hashes: int):
+    """(rows, num_hashes) uint64 MinHash signatures of ragged shingle
+    hashes: h32 = fold(h) to 32 bits mod p, then sig_i = min over the
+    row of (a_i·h32 + b_i) mod p; an empty row stays all zero.
+    a_i·h32 + b_i < 2^62, so uint64 never wraps and ``% p`` equals the
+    JVM ``pmod``."""
+    import numpy as np
+
+    P = np.uint64(_MH_PRIME)
+    base = ((H >> np.uint64(32)) ^ (H & np.uint64(0xFFFFFFFF))) % P
+    sig = np.zeros((lens.size, num_hashes), dtype=np.uint64)
+    full = lens > 0
+    if full.any():
+        starts = (np.cumsum(lens) - lens)[full]
+        sig[full] = np.stack([
+            np.minimum.reduceat((np.uint64(a) * base + np.uint64(b)) % P,
+                                starts)
+            for a, b in zip(*_minhash_coeffs(num_hashes))
+        ], axis=1)
+    return sig
+
+
 def minhash_signature_from_hashes(hashes: Column, num_hashes: int = 64) -> Column:
     """MinHash signature from per-shingle 64-bit hashes + a multiply-
     shift universal-hash family: h32 = fold(h) to 32 bits mod p
     (p = 2^31−1), then sig_i = min over shingles of (a_i·h32 + b_i)
     mod p.  Empty shingle sets → all-zero signature; NULL → NULL.
 
-    Executed as ONE vectorized Arrow stage (numpy integer arithmetic,
+    Executed as ONE vectorized Arrow stage (``_np_signature``,
     bit-identical to the JVM form it replaces): the interpreted
     aggregate-of-zip_with form allocated a num_hashes-element array
     per shingle — measured ~30 s of the 49 s minhash lane at sf1.0
     (50k docs × ~52 shingles × 64 seeds); the numpy outer product +
-    segmented min is ~1 s.  a_i·h32 + b_i < 2^62, so uint64 never
-    wraps and ``% p`` equals the JVM ``pmod``."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    segmented min is ~1 s."""
+    from pyspark.sql.functions import arrow_udf
 
-    a_co, b_co = _minhash_coeffs(num_hashes)
-    A = np.array(a_co, dtype=np.uint64)
-    B = np.array(b_co, dtype=np.uint64)
-    P = np.uint64(_MH_PRIME)
+    def _f(h):
+        H, lens, valid = _ragged(h)
+        sig = _np_signature(H, lens[valid], num_hashes)
+        return _pack(sig, valid * num_hashes, valid)
 
-    def _f(h_s):
-        n_rows = len(h_s)
-        lens = np.empty(n_rows, dtype=np.int64)
-        pieces = []
-        for i in range(n_rows):
-            a = h_s.iloc[i]
-            if a is None:
-                lens[i] = -1
-                continue
-            aa = np.asarray(a, dtype=np.int64)
-            lens[i] = aa.size
-            if aa.size:
-                pieces.append(aa)
-        mins = None
-        if pieces:
-            H = np.ascontiguousarray(np.concatenate(pieces)).view(np.uint64)
-            base = ((H >> np.uint64(32)) ^ (H & np.uint64(0xFFFFFFFF))) % P
-            pos = lens[lens > 0]
-            starts = np.cumsum(pos) - pos
-            mins = np.empty((len(pos), num_hashes), dtype=np.int64)
-            for s_i in range(num_hashes):
-                m = (A[s_i] * base + B[s_i]) % P
-                mins[:, s_i] = np.minimum.reduceat(
-                    m, starts
-                ).view(np.int64)
-        zeros = np.zeros(num_hashes, dtype=np.int64)
-        out = [None] * n_rows
-        seg = 0
-        for i in range(n_rows):
-            L = lens[i]
-            if L < 0:
-                continue
-            if L == 0:
-                out[i] = zeros
-                continue
-            out[i] = mins[seg]
-            seg += 1
-        return pd.Series(out, dtype="object")
-
-    _f.__annotations__ = {"h_s": pd.Series, "return": pd.Series}
-    return pandas_udf(_f, "array<long>")(hashes)
-
-
-def minhash_bands(sig: Column, bands: int, rows: int) -> Column:
-    """Band keys: hash of each r-slice of the signature."""
-    return F.array(
-        *[
-            F.xxhash64(
-                F.concat_ws(",", F.slice(sig, b * rows + 1, rows).cast("array<string>")),
-                F.lit(b),
-            )
-            for b in range(bands)
-        ]
-    )
+    return arrow_udf(_f, "array<long>")(hashes)
 
 
 def _np_band_key_matrix(sig_u, bands: int, rows: int):
     """(n, bands·rows) uint64 signature matrix → (n, bands) int64 band
     keys: the numpy xxhash64 twin chained over each r-slice + band
-    index.  The one band-key computation shared by the banding UDF and
-    the replicated dedup_against probe (equal slices ⇔ equal keys, the
-    only property banding uses)."""
+    index, i.e. Spark's ``xxhash64(slice…, CAST(b AS BIGINT))``.  The
+    one band-key computation, shared by the banding UDF, the fused doc
+    pass and the replicated dedup_against probe (equal slices ⇔ equal
+    keys, the only property banding uses)."""
     import numpy as np
 
     keys = np.empty((sig_u.shape[0], bands), dtype=np.int64)
@@ -832,139 +806,44 @@ def _np_band_key_matrix(sig_u, bands: int, rows: int):
 
 
 def _minhash_bands_udf(bands: int, rows: int):
-    """pandas UDF: signature array<long> → band keys array<long> via
-    the numpy xxhash64 twin chained over each r-slice + band index —
-    the numeric form of ``minhash_bands`` (equal slices ⇔ equal keys,
-    the only property banding uses; 16 long→string casts + concat per
-    doc removed).  Used by ``dedup_against`` where signatures come
-    from a pre-built snapshot and must band at query time."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    """Arrow UDF: signature array<long> → band keys array<long> via
+    ``_np_band_key_matrix`` (no long→string casts or concat per doc).
+    Used by ``dedup_against`` where signatures come from a pre-built
+    snapshot and must band at query time."""
+    from pyspark.sql.functions import arrow_udf
 
-    def _f(sig_s):
-        n_rows = len(sig_s)
-        out = [None] * n_rows
-        mat = np.empty((n_rows, bands * rows), dtype=np.int64)
-        live = np.zeros(n_rows, dtype=bool)
-        for i in range(n_rows):
-            s = sig_s.iloc[i]
-            if s is None:
-                continue
-            mat[i] = np.asarray(s, dtype=np.int64)
-            live[i] = True
-        idx = np.flatnonzero(live)
-        if idx.size:
-            keys = _np_band_key_matrix(mat[idx].view(np.uint64),
-                                       bands, rows)
-            for k, i in enumerate(idx):
-                out[i] = keys[k]
-        return pd.Series(out, dtype="object")
+    def _f(sig):
+        flat, _, valid = _ragged(sig)
+        keys = _np_band_key_matrix(flat.reshape(-1, bands * rows),
+                                   bands, rows)
+        return _pack(keys, valid * bands, valid)
 
-    _f.__annotations__ = {"sig_s": pd.Series, "return": pd.Series}
-    return pandas_udf(_f, "array<long>")
+    return arrow_udf(_f, "array<long>")
 
 
 def _minhash_doc_udf(shingle_n: int, num_hashes: int, bands: int):
     """Fused per-document minhash pass: (token_hashes, fallback) →
     struct(sig array<long>, bands array<long>) in ONE Arrow crossing —
-    shingle chain + distinct + signature + band keys share a single
-    vectorized stage (the split form paid two Python crossings plus
-    JVM band-key STRING building: 16 bands × 4 long→string casts +
-    concat per doc).  Band keys chain the slice values + band index
-    through the numpy xxhash64 twin; equal slices ⇔ equal keys, the
-    only property banding uses (the key VALUES are internal to the
-    self-join and never reach operator output)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    ``_np_shingles``, ``_np_signature`` and ``_np_band_key_matrix``
+    composed in a single vectorized stage (the split form paid two
+    Python crossings plus JVM band-key STRING building: 16 bands × 4
+    long→string casts + concat per doc).  The key VALUES are internal
+    to the self-join and never reach operator output.  A NULL text
+    gives a struct of NULLs."""
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
 
-    rows = num_hashes // bands
-    a_co, b_co = _minhash_coeffs(num_hashes)
-    A = np.array(a_co, dtype=np.uint64)
-    B = np.array(b_co, dtype=np.uint64)
-    P = np.uint64(_MH_PRIME)
+    def _f(th, fb):
+        S, lens, valid = _np_shingles(th, fb, shingle_n)
+        sig = _np_signature(S, lens[valid], num_hashes)
+        keys = _np_band_key_matrix(sig, bands, num_hashes // bands)
+        return pa.StructArray.from_arrays(
+            [_pack(sig, valid * num_hashes, valid),
+             _pack(keys, valid * bands, valid)],
+            names=["sig", "bands"],
+        )
 
-    def _f(th_s, fb_s):
-        n_rows = len(th_s)
-        lens = np.empty(n_rows, dtype=np.int64)
-        pieces = []
-        for i in range(n_rows):
-            a = th_s.iloc[i]
-            if a is None:
-                lens[i] = -1
-                continue
-            aa = np.asarray(a, dtype=np.int64)
-            lens[i] = aa.size
-            if aa.size >= shingle_n:
-                pieces.append(aa)
-        fb = fb_s.to_numpy()
-        # per-doc distinct shingle hashes (short docs: the fallback
-        # single hash), concatenated for the signature pass
-        sh_pieces = []
-        sh_lens = np.zeros(n_rows, dtype=np.int64)
-        C = None
-        if pieces:
-            C = _np_chain(
-                np.ascontiguousarray(np.concatenate(pieces)).view(
-                    np.uint64),
-                shingle_n,
-            ).view(np.int64)
-        o = 0
-        for i in range(n_rows):
-            L = lens[i]
-            if L < 0:
-                continue
-            if L < shingle_n:
-                sh_pieces.append(np.array([fb[i]], dtype=np.int64))
-                sh_lens[i] = 1
-                continue
-            seg = C[o:o + L - (shingle_n - 1)]
-            o += L
-            _, idx = np.unique(seg, return_index=True)
-            u = seg[np.sort(idx)]
-            sh_pieces.append(u)
-            sh_lens[i] = u.size
-        sig_rows = None
-        band_rows = None
-        if sh_pieces:
-            H = np.ascontiguousarray(np.concatenate(sh_pieces)).view(
-                np.uint64)
-            base = ((H >> np.uint64(32)) ^ (H & np.uint64(0xFFFFFFFF))) % P
-            pos = sh_lens[sh_lens > 0]
-            starts = np.cumsum(pos) - pos
-            sig_rows = np.empty((len(pos), num_hashes), dtype=np.int64)
-            for s_i in range(num_hashes):
-                m = (A[s_i] * base + B[s_i]) % P
-                sig_rows[:, s_i] = np.minimum.reduceat(m, starts).view(
-                    np.int64)
-            # band keys: xxhash64(slice values…, band) per the Spark
-            # multi-arg chained-seed form, vectorized across docs
-            sig_u = sig_rows.view(np.uint64)
-            band_rows = np.empty((len(pos), bands), dtype=np.int64)
-            with np.errstate(over="ignore"):
-                for b_i in range(bands):
-                    acc = np.full(len(pos), 42, dtype=np.uint64)
-                    for j in range(rows):
-                        acc = _np_hash_long(sig_u[:, b_i * rows + j], acc)
-                    acc = _np_hash_long(
-                        np.uint64(b_i) * np.ones(1, dtype=np.uint64), acc
-                    )
-                    band_rows[:, b_i] = acc.view(np.int64)
-        out_sig = [None] * n_rows
-        out_band = [None] * n_rows
-        seg_i = 0
-        for i in range(n_rows):
-            if lens[i] < 0:
-                continue
-            out_sig[i] = sig_rows[seg_i]
-            out_band[i] = band_rows[seg_i]
-            seg_i += 1
-        return pd.DataFrame({"sig": out_sig, "bands": out_band})
-
-    _f.__annotations__ = {"th_s": pd.Series, "fb_s": pd.Series,
-                          "return": pd.DataFrame}
-    return pandas_udf(_f, "struct<sig:array<long>,bands:array<long>>")
+    return arrow_udf(_f, "struct<sig:array<long>,bands:array<long>>")
 
 
 def minhash_candidates(
@@ -2114,22 +1993,14 @@ def _ngram_jaccard_pairs_replicated(
         F.col(id_col).alias("__id"),
         word_shingle_hashes(F.col(text_col), shingle_n).alias("__sh"),
     )
-    tbl = per_doc.toArrow().combine_chunks()
-    idc = (tbl.column("__id").chunk(0)
-           if tbl.column("__id").num_chunks
-           else pa.array([], type=tbl.schema.field("__id").type))
-    shc = (tbl.column("__sh").chunk(0)
-           if tbl.column("__sh").num_chunks
-           else pa.array([], type=tbl.schema.field("__sh").type))
+    tbl = per_doc.toArrow()
+    idc = tbl.column("__id").combine_chunks()
     ok_doc = idc.is_valid().to_numpy(zero_copy_only=False)
     ids_doc = pa.compute.fill_null(idc, 0).to_numpy(zero_copy_only=False)
-    # null shingle arrays (null text) contribute no postings: flatten()
-    # skips null entries' ranges, and their lengths fill as 0
-    flat = shc.flatten().to_numpy(zero_copy_only=False).astype(
-        np.int64, copy=False)
-    lens_doc = pa.compute.fill_null(
-        pa.compute.list_value_length(shc), 0
-    ).to_numpy(zero_copy_only=False).astype(np.int64)
+    # null shingle arrays (null text) contribute no postings: their
+    # lengths are 0
+    flat, lens_doc, _ = _ragged(tbl.column("__sh"))
+    flat = flat.view(np.int64)
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
 
     # ---- driver-side index prep (the broadcast-relation build, like

@@ -1077,62 +1077,45 @@ def _lm_score_replicated(
     exactly as the join path, whose summation order is shuffle-
     dependent (round(6) is the declared stability contract)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
 
-    from jepl_spark.operators.dedup import _np_chain, _token_hashes
+    from jepl_spark.operators.dedup import (
+        _np_chain, _np_windows, _ragged, _token_hashes)
 
     alpha = float(lm.alpha)
     a_v = float(lm.alpha * lm.vocab_size)
 
-    def _score(th_s):
-        n_rows = len(th_s)
-        lens = np.empty(n_rows, dtype=np.int64)
-        pieces = []
-        for i in range(n_rows):
-            a = th_s.iloc[i]
-            if a is None:
-                lens[i] = 0
-                continue
-            aa = np.asarray(a, dtype=np.int64)
-            lens[i] = aa.size
-            if aa.size >= 2:
-                pieces.append(aa)
-        n_out = np.zeros(n_rows, dtype=np.int64)
-        s_out = np.zeros(n_rows, dtype=np.float64)
-        if pieces:
-            bkeys, bc2, bukeys, bc1 = model_bc.value
-            H = np.ascontiguousarray(np.concatenate(pieces))
-            C = _np_chain(H.view(np.uint64), 2).view(np.int64)
-            # per-position smoothed logp over the concatenated array;
-            # the last position of each row (whose chain crossed into
-            # the next row) is discarded by the per-row slice below,
-            # exactly as _window_chain_udf does
-            if bkeys.size:
-                idx = np.searchsorted(bkeys, C)
-                idx[idx == bkeys.size] = 0
-                num = np.where(bkeys[idx] == C, bc2[idx], 0.0) + alpha
-            else:  # min_count pruned every bigram: all-unseen
-                num = np.full(C.size, alpha)
-            if bukeys.size:
-                uidx = np.searchsorted(bukeys, H)
-                uidx[uidx == bukeys.size] = 0
-                den = np.where(bukeys[uidx] == H, bc1[uidx], 0.0) + a_v
-            else:
-                den = np.full(H.size, a_v)
-            logp = np.log(num / den)
-            o = 0
-            for i in range(n_rows):
-                length = lens[i]
-                if length < 2:
-                    continue
-                n_out[i] = length - 1
-                s_out[i] = logp[o:o + length - 1].sum()
-                o += length
-        return pd.DataFrame({"n": n_out, "s": s_out})
+    def _score(th):
+        H, lens, _ = _ragged(th)
+        C = _np_chain(H, 2).view(np.int64)
+        H = H.view(np.int64)
+        bkeys, bc2, bukeys, bc1 = model_bc.value
+        # per-position smoothed logp over the concatenated array; the
+        # window slice drops each row's last position, whose chain
+        # crossed into the next row
+        if bkeys.size:
+            idx = np.searchsorted(bkeys, C)
+            idx[idx == bkeys.size] = 0
+            num = np.where(bkeys[idx] == C, bc2[idx], 0.0) + alpha
+        else:  # min_count pruned every bigram: all-unseen
+            num = np.full(C.size, alpha)
+        if bukeys.size:
+            uidx = np.searchsorted(bukeys, H)
+            uidx[uidx == bukeys.size] = 0
+            den = np.where(bukeys[uidx] == H, bc1[uidx], 0.0) + a_v
+        else:
+            den = np.full(H.size, a_v)
+        logp, n = _np_windows(np.log(num / den), lens, 2)
+        # one .sum() per row keeps numpy's pairwise summation (a
+        # reduceat adds sequentially: different low bits)
+        s = [seg.sum() for seg in np.split(logp, np.cumsum(n))[:-1]]
+        return pa.StructArray.from_arrays(
+            [pa.array(n), pa.array(np.array(s, dtype=np.float64))],
+            names=["n", "s"],
+        )
 
-    _score.__annotations__ = {"th_s": pd.Series, "return": pd.DataFrame}
-    score_udf = pandas_udf(_score, "struct<n:bigint,s:double>")
+    score_udf = arrow_udf(_score, "struct<n:bigint,s:double>")
 
     th = _token_hashes(_tokens(F.lower(F.col(text_col))))
     partial = df.select(

@@ -10,8 +10,10 @@ promised bit-identical results — these pin the promises directly.
 - Myers' bit-parallel WER distance must equal the quadratic DP;
 - batch winnowing must equal the per-row formulation on every length
   class;
-- the fused minhash doc pass must reproduce
-  minhash_signature_from_hashes(word_shingle_hashes(...)) exactly;
+- the fused minhash doc pass's signatures and band keys must equal a
+  reference built from Spark's xxhash64 and Python integers, and
+  every Arrow hash kernel must give the same output at a 2-row batch
+  size as at the default;
 - lm_score's hashed-key path must score identically to the string
   path;
 - the guarded operators must give the reference output under the
@@ -228,26 +230,128 @@ def test_batch_winnow_equals_per_row_reference(spark):
         assert got[i] == [int(x) for x in one(t)], f"row {i}: {t!r}"
 
 
-def test_fused_minhash_doc_pass_matches_signature_pipeline(spark):
-    texts = ["a b c d e f", "a b c d e f", "x y", "", None,
-             "one two three four five six seven eight nine"]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
+def _jvm_shingle_hashes(text, n):
+    """``word_shingle_hashes`` as one JVM expression, no numpy: token
+    xxhash64s chained by xxhash64(prefix, next), array_distinct, and
+    the hashed token join for texts shorter than n."""
+    toks = D._norm_tokens(text)
+    th = F.transform(toks, lambda t: F.xxhash64(t))
+    chained = F.transform(
+        F.sequence(F.lit(0), F.size(th) - n),
+        lambda i: F.aggregate(F.slice(th, i + 2, n - 1),
+                              F.element_at(th, i + 1),
+                              lambda acc, x: F.xxhash64(acc, x)))
+    return (F.when(toks.isNull(), F.lit(None))
+            .when(F.size(toks) < n,
+                  F.array(F.xxhash64(F.concat_ws(" ", toks))))
+            .otherwise(F.array_distinct(chained)))
+
+
+def _py_signature(hashes, num_hashes):
+    """MinHash signature in Python integers from ``_minhash_coeffs``."""
+    if hashes is None:
+        return None
+    a_co, b_co = D._minhash_coeffs(num_hashes)
+    p = D._MH_PRIME
+    us = [h % 2**64 for h in hashes]
+    folds = [((u >> 32) ^ (u & 0xFFFFFFFF)) % p for u in us]
+    return [min(((a * f + b) % p for f in folds), default=0)
+            for a, b in zip(a_co, b_co)]
+
+
+@pytest.mark.parametrize("n,num_hashes,bands", [(3, 64, 16), (5, 20, 4)])
+def test_minhash_doc_pass_matches_jvm_reference(spark, n, num_hashes,
+                                                bands):
+    """The fused doc pass's ``sig`` and ``bands`` equal a reference
+    built without the numpy kernels: shingles chained by Spark's own
+    xxhash64, signatures in Python integers, and band key b =
+    xxhash64(slice values, CAST(b AS BIGINT)) — over NULL, empty,
+    whitespace-only, shorter-than-n and repeated-token texts."""
+    random.seed(5)
+    texts = [None, "", " \t\n ", "x y", "a a a a a a a a",
+             "a b a b a b a b a b", "one two three four five",
+             "The quick brown fox, the QUICK brown fox\tjumps"]
+    texts += [" ".join(random.choice("pqrstu") for _ in range(
+        random.randrange(1, 30))) for _ in range(30)]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
     toks = D._norm_tokens(F.col("text"))
-    fused = df.select(
+    got = {r.doc_id: (r.sb.sig, r.sb.bands) for r in df.select(
         "doc_id",
-        D._minhash_doc_udf(3, 64, 16)(
+        D._minhash_doc_udf(n, num_hashes, bands)(
             D._token_hashes(toks), F.xxhash64(F.concat_ws(" ", toks))
-        ).alias("sb"),
-    ).select("doc_id", F.col("sb.sig").alias("sig")).collect()
-    plain = df.select(
+        ).alias("sb")).collect()}
+
+    shingles = {r.doc_id: r.sh for r in df.select(
+        "doc_id", _jvm_shingle_hashes(F.col("text"), n).alias("sh")
+    ).collect()}
+    # the shingle UDF itself, first-occurrence order included
+    assert shingles == {r.doc_id: r.sh for r in df.select(
+        "doc_id", D.word_shingle_hashes(F.col("text"), n).alias("sh")
+    ).collect()}
+    sigs = spark.createDataFrame(
+        [(i, _py_signature(sh, num_hashes)) for i, sh in shingles.items()],
+        "doc_id long, sig array<bigint>")
+    r = num_hashes // bands
+    keys = F.array(*[
+        F.xxhash64(*[F.col("sig")[b * r + j] for j in range(r)],
+                   F.lit(b).cast("bigint"))
+        for b in range(bands)])
+    ref = {row.doc_id: (row.sig, row.keys) for row in sigs.select(
+        "doc_id", "sig",
+        F.when(F.col("sig").isNotNull(), keys).alias("keys")).collect()}
+    assert got[0] == (None, None)
+    assert got == ref
+
+    # the unfused signature UDF, including the all-zero signature of an
+    # empty shingle set
+    h = spark.createDataFrame(
+        [(-1, []), (-2, None), (-3, [5, -7, 5])] + list(shingles.items()),
+        "doc_id long, h array<bigint>")
+    plain = {row.doc_id: row.sig for row in h.select(
         "doc_id",
-        D.minhash_signature_from_hashes(
-            D.word_shingle_hashes(F.col("text"), 3), 64).alias("sig"),
-    ).collect()
-    f = {r.doc_id: (None if r.sig is None else list(r.sig)) for r in fused}
-    p = {r.doc_id: (None if r.sig is None else list(r.sig)) for r in plain}
-    assert f == p
+        D.minhash_signature_from_hashes(F.col("h"), num_hashes).alias("sig"),
+    ).collect()}
+    assert plain == {row.doc_id: _py_signature(row.h, num_hashes)
+                     for row in h.collect()}
+    assert plain[-1] == [0] * num_hashes
+
+
+def test_kernels_equal_across_arrow_batch_edges(spark, caplog):
+    """2-row Arrow batches, with NULL texts on both sides of a batch
+    edge, give the same shingle and window hashes, minhash candidates
+    and replicated hashed lm_score as the default batch size: the
+    kernels' offsets must restart with every batch."""
+    caplog.set_level(logging.INFO, logger="jepl_spark.guard")
+    texts = ["a b c d e f g h", None, None, "a b c d e f g x",
+             "", "x y", "a b c d e f g h", "p q r s t u v w x y z",
+             "  p q r s t u v w x y z  ", "one"]
+    # one partition, so 2-row batches actually split the rows
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string").coalesce(1)
+    lm = T.lm_train(df, hash_keys=True)
+
+    def outputs():
+        per_doc = df.select(
+            "doc_id",
+            D.word_shingle_hashes(F.col("text"), 3).alias("sh"),
+            D.window_hash_positions(F.col("text"), 3).alias("win"),
+        ).collect()
+        return (
+            {r.doc_id: (r.sh, r.win) for r in per_doc},
+            sorted(tuple(r) for r in D.minhash_candidates(df).collect()),
+            sorted(tuple(r) for r in T.lm_score(df, lm).collect()),
+        )
+
+    default = outputs()
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    try:
+        small = outputs()
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    assert _paths(caplog, "lm_score") == ["local"]
+    assert default[0][1] == (None, None) and default[1] and default[2]
+    assert small == default
 
 
 @pytest.fixture(params=["default", 0])

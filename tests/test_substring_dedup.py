@@ -103,16 +103,18 @@ def test_string_ids(spark):
 
 
 def test_window_hash_positions_shape(spark):
-    df = _docs(spark, [(1, "a b c d e"), (2, "a b"), (3, "")])
+    df = _docs(spark, [(1, "a b c d e"), (2, "a b"), (3, ""), (4, None),
+                       (5, "a b c")])
     got = {
-        r.doc_id: r.n
+        r.doc_id: None if r.w is None else len(r.w)
         for r in df.select(
             "doc_id",
-            F.size(D.window_hash_positions(F.col("text"), 3)).alias("n"),
+            D.window_hash_positions(F.col("text"), 3).alias("w"),
         ).collect()
     }
-    # 5 tokens -> 3 windows; 2 tokens -> 0; blank ([""] singleton) -> 0
-    assert got == {1: 3, 2: 0, 3: 0}
+    # 5 tokens -> 3 windows; 2 tokens -> 0; blank ([""] singleton) -> 0;
+    # NULL -> NULL; exactly k tokens -> 1
+    assert got == {1: 3, 2: 0, 3: 0, 4: None, 5: 1}
 
 
 def test_matches_python_reference_on_random_corpus(spark):

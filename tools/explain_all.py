@@ -9,7 +9,8 @@ Checks printed per query:
 - number of Exchange (shuffle) nodes
 - presence of WholeStageCodegen
 - any row-at-a-time Python (BatchEvalPython) — should NEVER appear
-  (ArrowEvalPython is the vectorized path and only on the audio lane)
+  (ArrowEvalPython, MapInPandas and MapInArrow are the vectorized
+  Python paths)
 """
 
 from __future__ import annotations
@@ -109,7 +110,8 @@ def main() -> int:
         n_wsc = len(set(re.findall(r"codegen id : (\d+)", plan))) or len(re.findall(r"WholeStageCodegen", plan))
         pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
         batch_eval = "BatchEvalPython" in plan
-        arrow_eval = "ArrowEvalPython" in plan or "MapInPandas" in plan
+        arrow_eval = any(node in plan for node in
+                         ("ArrowEvalPython", "MapInPandas", "MapInArrow"))
         print(
             f"== {name}: exchanges={n_exchanges} codegen_spans={n_wsc} "
             f"pushed={[p for p in pushed if p][:2]} "
