@@ -1,11 +1,12 @@
 """Text-analysis operators for training-data pipelines.
 
-Pure ``pyspark.sql.functions`` / SQL lambda expressions — JVM-side,
-whole-stage-codegen'd — for everything except ``winnow_fingerprints``,
-which is an Arrow-batched pandas UDF by measurement (interpreted JVM
-array lambdas were 32× slower for its char-level rolling math; see its
-docstring).  All are per-row projections: linear with input splits, no
-shuffle.
+Mostly JVM ``pyspark.sql.functions`` expressions: plain ones are
+whole-stage-codegen'd, the lambdas (``transform``, ``filter``,
+``aggregate``) are ``CodegenFallback`` and run interpreted.  The
+char-level and DP kernels (``winnow_fingerprints``, ``fix_encoding``,
+``nfc_normalize``, WER, the replicated LM score) are Arrow-batched
+Python UDFs by measurement (see ``winnow_fingerprints``).  Per-row
+operators are projections: linear with input splits, no shuffle.
 """
 
 from __future__ import annotations
@@ -25,6 +26,17 @@ def _tokens(text: Column) -> Column:
     )
 
 
+def _let(expr: Column, fn) -> Column:
+    """``fn(expr)`` with ``expr`` evaluated once per row (Columns have
+    no let-binding: each reference re-inlines the whole expression)."""
+    return F.transform(F.array(expr), fn)[0]
+
+
+def _count_chars(text: Column, cls: str) -> Column:
+    """Characters of ``text`` in ``[cls]``, deleting only those."""
+    return F.length(text) - F.length(F.regexp_replace(text, f"[{cls}]", ""))
+
+
 def token_count(text: Column) -> Column:
     """Whitespace token count (0 for empty/blank text)."""
     return F.size(_tokens(text))
@@ -42,8 +54,7 @@ def bpe_ish_token_count(text: Column) -> Column:
             (F.length(w) + 3) / 4
         ).cast("int"),
     )
-    punct = F.length(F.regexp_replace(text, r"[^.,;:!?]", ""))
-    return (pieces + punct).cast("long")
+    return (pieces + _count_chars(text, ".,;:!?")).cast("long")
 
 
 def quality_features(
@@ -56,37 +67,34 @@ def quality_features(
     stopword ratio (fraction of lowercased tokens in ``stopwords`` —
     default: the frozen lang_id fixture's English list; near-zero on
     keyword spam / non-linguistic text, the C4/Gopher-style signal).
-    All pure JVM projections, fused with the scan."""
+    JVM projections fused with the scan: the text is tokenized once,
+    into a column the token statistics share, and each character class
+    is counted by deleting only its own characters."""
     text = F.col(text_col)
-    toks = _tokens(text)
+    toks = F.col("__toks")
+    n_tok = F.size(toks)
     n_chars = F.length(text)
     safe_len = F.when(n_chars == 0, F.lit(1)).otherwise(n_chars)
     if stopwords is None:
         stopwords = _STOPWORDS["en"]
     stop_arr = F.lit(list(stopwords))
-    stop_cnt = F.size(
-        F.filter(toks, lambda w: F.array_contains(stop_arr, F.lower(w)))
-    )
-    return df.select(
+
+    def _per_token(count):
+        return F.when(n_tok == 0, F.lit(0.0)).otherwise(count.cast("double") / n_tok)
+
+    return df.select("*", _tokens(text).alias("__toks")).select(
         "*",
         n_chars.alias("q_n_chars"),
-        F.size(toks).alias("q_n_tokens"),
-        (F.length(F.regexp_replace(text, r"[^.,;:!?]", "")) / safe_len)
-        .alias("q_punct_ratio"),
-        (F.length(F.regexp_replace(text, r"[^0-9]", "")) / safe_len)
-        .alias("q_digit_ratio"),
-        (F.length(F.regexp_replace(text, r"[^A-Z]", "")) / safe_len)
-        .alias("q_upper_ratio"),
-        F.when(F.size(toks) == 0, F.lit(0.0))
-        .otherwise(
-            F.aggregate(toks, F.lit(0), lambda a, w: a + F.length(w)).cast("double")
-            / F.size(toks)
-        )
+        n_tok.alias("q_n_tokens"),
+        (_count_chars(text, ".,;:!?") / safe_len).alias("q_punct_ratio"),
+        (_count_chars(text, "0-9") / safe_len).alias("q_digit_ratio"),
+        (_count_chars(text, "A-Z") / safe_len).alias("q_upper_ratio"),
+        _per_token(F.aggregate(toks, F.lit(0), lambda a, w: a + F.length(w)))
         .alias("q_mean_token_len"),
-        F.when(F.size(toks) == 0, F.lit(0.0))
-        .otherwise(stop_cnt.cast("double") / F.size(toks))
+        _per_token(F.size(F.filter(
+            toks, lambda w: F.array_contains(stop_arr, F.lower(w)))))
         .alias("q_stopword_ratio"),
-    )
+    ).drop("__toks")
 
 
 def winnow_fingerprints(text: Column, k: int = 8, window: int = 4) -> Column:
@@ -300,34 +308,34 @@ def lang_id(text: Column) -> Column:
        the distinct-token set strictly most (8 languages);
     3. ties and zero overlap → 'und' (undetermined).
 
-    Pure JVM expressions (regexp counts + array_intersect) — per-row
-    projection, no shuffle, scales linearly with input splits."""
-    toks = _tokens(F.lower(text))
-    n_chars = F.length(text)
-    safe_len = F.when(n_chars == 0, F.lit(1)).otherwise(n_chars)
+    Evaluation shape: the lowercased text is tokenized once and the
+    eight scores are built once, as one array (``_let``); the winner is
+    the language holding the unique maximum score, when it is > 0 —
+    the strict argmax.  The eight script-ratio regexes run only on rows
+    where one ``rlike`` over the union of the script ranges matches: a
+    row without script characters has every ratio 0, and the fixture
+    loader enforces every threshold > 0.  JVM expressions, per-row
+    projection, no shuffle; the two lambdas run interpreted."""
+    langs = list(_STOPWORDS)
 
-    scores = {
-        lang: F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words])))
-        for lang, words in _STOPWORDS.items()
-    }
-    best = None
-    for lang in _STOPWORDS:
-        cond = F.lit(True)
-        for other in _STOPWORDS:
-            if other != lang:
-                cond = cond & (scores[lang] > scores[other])
-        branch = F.when(cond & (scores[lang] > 0), F.lit(lang))
-        best = branch if best is None else best.when(
-            cond & (scores[lang] > 0), F.lit(lang)
-        )
-    guess = best.otherwise(F.lit("und"))
+    def _vote(scores):
+        top = F.array_max(scores)
+        unique = F.size(F.array_remove(scores, top)) == len(langs) - 1
+        return F.when((top > 0) & unique,
+                      F.lit(langs)[F.array_position(scores, top) - 1])
 
-    # script checks take precedence, applied in fixture order (build the
-    # WHEN-chain back to front so the FIRST listed script wins)
-    for lang, lo, hi, thr in reversed(_SCRIPTS):
-        ratio = F.length(F.regexp_replace(text, f"[^{lo}-{hi}]", "")) / safe_len
-        guess = F.when((n_chars > 0) & (ratio > thr), F.lit(lang)).otherwise(guess)
-    return guess
+    guess = _let(_tokens(F.lower(text)), lambda toks: _let(F.array(*[
+        F.size(F.array_intersect(toks, F.lit(words)))
+        for words in _STOPWORDS.values()
+    ]), _vote))
+
+    # script checks take precedence, applied in fixture order
+    script = None
+    for lang, lo, hi, thr in _SCRIPTS:
+        hit = _count_chars(text, f"{lo}-{hi}") / F.length(text) > thr
+        script = F.when(hit, lang) if script is None else script.when(hit, lang)
+    any_script = "[" + "".join(f"{lo}-{hi}" for _, lo, hi, _ in _SCRIPTS) + "]"
+    return F.coalesce(F.when(text.rlike(any_script), script), guess, F.lit("und"))
 
 
 # ---------------------------------------------------------------------------

@@ -5,6 +5,7 @@ known answers."""
 from __future__ import annotations
 
 import math
+import re
 
 import numpy as np
 import pytest
@@ -1375,6 +1376,114 @@ def test_quality_stopword_ratio(spark):
     q2 = {r["doc_id"]: r["q_stopword_ratio"]
           for r in T.quality_features(df, stopwords=["buy", "now"]).collect()}
     assert q2[1] == pytest.approx(0.5) and q2[0] == 0.0
+
+
+def _ref_tokens(t):
+    """Python twin of ``_tokens``: Spark's ``trim`` strips spaces only,
+    then a Java ``\\s+`` split (ASCII whitespace, empty edge tokens
+    kept)."""
+    s = t.strip(" ")
+    return re.split(r"[ \t\n\x0b\f\r]+", s) if s else []
+
+
+def _ref_lang(t, spec):
+    if t is None:
+        return "und"
+    for lang, lo, hi, thr in spec["scripts"]:
+        if t and sum(lo <= c <= hi for c in t) / len(t) > thr:
+            return lang
+    toks = set(_ref_tokens(t.lower()))
+    scores = {lang: len(toks & set(ws)) for lang, ws in spec["stopwords"].items()}
+    best = max(scores.values())
+    top = [lang for lang, s in scores.items() if s == best]
+    return top[0] if best > 0 and len(top) == 1 else "und"
+
+
+def _ref_quality(t, stop):
+    if t is None:
+        return (None,) * 7
+    toks = _ref_tokens(t)
+    safe = len(t) or 1
+    n_tok = len(toks)
+    return (
+        len(t),
+        n_tok,
+        sum(c in ".,;:!?" for c in t) / safe,
+        sum("0" <= c <= "9" for c in t) / safe,
+        sum("A" <= c <= "Z" for c in t) / safe,
+        sum(map(len, toks)) / n_tok if n_tok else 0.0,
+        sum(w.lower() in stop for w in toks) / n_tok if n_tok else 0.0,
+    )
+
+
+def _ref_bpe(t):
+    if t is None:
+        return None
+    pieces = sum(1 if len(w) <= 4 else (len(w) + 3) // 4 for w in _ref_tokens(t))
+    return pieces + sum(c in ".,;:!?" for c in t)
+
+
+def test_lang_quality_bpe_match_python_reference(spark):
+    """lang_id, quality_features (default and custom stopwords) and
+    bpe_ish_token_count against a pure-Python reference built from the
+    frozen fixture, on the edge rows: blank text, ties, case, script
+    ratios at and just above the threshold, mixed scripts, non-BMP
+    characters and accented Latin text."""
+    import json
+    import os
+
+    with open(os.path.join(os.path.dirname(__file__), "..",
+                           "jepl_spark/fixtures/lang_id.json")) as f:
+        spec = json.load(f)
+    texts = [
+        None, "", "   ", " \t\n ", "\tlead and trail\n",
+        "the le",                                  # en/fr tie
+        "zzz qqq xxx",                             # zero overlap
+        "THE Cat AND the DOG is HERE",             # uppercase stopwords
+        "the " + "x" * 15 + "あ",                  # kana ratio == 0.05
+        "the " + "x" * 14 + "ああ",                # one kana above it
+        "le " + "x" * 5 + "жж",                    # Cyrillic ratio == 0.2
+        "le " + "x" * 4 + "жжж",                   # one Cyrillic above it
+        "日本語の文章を書く",                        # kana + CJK: ja first
+        "the cat 😀 sat, on the mat!",             # non-BMP emoji
+        "жж xxxxx😀",                              # 2/9 > 0.2 only if 😀 is 1 char
+        "le café est très bon pour la santé",      # accented, no script
+        "o gato não está com um amigo",
+        "hi internationalization, ok! 123 ABC",
+        "Die Katze und der Hund; ist das ein Test?",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id int, text string")
+    got = {
+        r["doc_id"]: r
+        for r in df.select(
+            "doc_id",
+            T.lang_id(F.col("text")).alias("lang"),
+            T.bpe_ish_token_count(F.col("text")).alias("bpe"),
+        ).collect()
+    }
+    cols = ["q_n_chars", "q_n_tokens", "q_punct_ratio", "q_digit_ratio",
+            "q_upper_ratio", "q_mean_token_len", "q_stopword_ratio"]
+    for stop in (None, ["cat", "der", "ok"]):
+        q = T.quality_features(df, stopwords=stop)
+        assert q.columns == ["doc_id", "text"] + cols
+        want_stop = set(spec["stopwords"]["en"] if stop is None else stop)
+        for r in q.collect():
+            t = texts[r["doc_id"]]
+            assert tuple(r[c] for c in cols) == _ref_quality(t, want_stop), repr(t)
+    for i, t in enumerate(texts):
+        assert got[i]["lang"] == _ref_lang(t, spec), repr(t)
+        assert got[i]["bpe"] == _ref_bpe(t), repr(t)
+
+
+def test_lang_id_plan_evaluates_scores_once(spark):
+    """Each stopword score is built once: the optimized plan of one
+    lang_id call holds a bounded number of intersections and splits
+    (a CASE chain that re-inlines the eight scores holds hundreds)."""
+    df = spark.range(2).select(F.col("id").cast("string").alias("t"))
+    qe = df.select(T.lang_id(F.col("t")))._jdf.queryExecution()
+    s = qe.optimizedPlan().toString()
+    assert s.count("array_intersect") <= 16, s.count("array_intersect")
+    assert s.count("split(") <= 2, s.count("split(")
 
 
 def test_oov_rate(spark):

@@ -11,6 +11,8 @@ Checks printed per query:
 - any row-at-a-time Python (BatchEvalPython) — should NEVER appear
   (ArrowEvalPython, MapInPandas and MapInArrow are the vectorized
   Python paths)
+- plan_chars: the length of the optimized logical plan string, where
+  an expression re-inlined many times into one projection shows up
 """
 
 from __future__ import annotations
@@ -101,7 +103,9 @@ def main() -> int:
             mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"
             )
-            plan = df._jdf.queryExecution().explainString(mode)
+            qe = df._jdf.queryExecution()
+            plan = qe.explainString(mode)
+            plan_chars = len(qe.optimizedPlan().toString())
         except Exception as e:
             print(f"== {name}: ERROR {e}")
             bad += 1
@@ -115,7 +119,8 @@ def main() -> int:
         print(
             f"== {name}: exchanges={n_exchanges} codegen_spans={n_wsc} "
             f"pushed={[p for p in pushed if p][:2]} "
-            f"python={'ARROW' if arrow_eval else ('ROW!!' if batch_eval else 'none')}"
+            f"python={'ARROW' if arrow_eval else ('ROW!!' if batch_eval else 'none')} "
+            f"plan_chars={plan_chars}"
         )
         if batch_eval:
             print(f"   !! row-at-a-time Python detected in {name}")
