@@ -38,6 +38,7 @@ corpus does.
 from __future__ import annotations
 
 import math as _math
+import operator as _operator
 import re as _re
 from typing import Optional
 
@@ -57,7 +58,8 @@ class JeplCompileError(Exception):
 
 class CExpr:
     """A compiled expression: Column + static JEPL type + payload for
-    operand-only node kinds (list values / regex pattern).
+    operand-only node kinds (list values / regex pattern).  A FLOAT or
+    INT value's Column is always DoubleType.
 
     ``maybe_nan`` marks float values that can be IEEE NaN at runtime.
     JSON cannot encode NaN, so JSON-origin field values never are — NaN
@@ -99,8 +101,13 @@ def _float_div_zero_case(lc: Column, rc: Column) -> Column:
         .otherwise(F.when(neg_divisor, -base).otherwise(base))
     )
 
-_CMP_OPS = {Tok.EQ, Tok.NEQ, Tok.LT, Tok.LTE, Tok.GT, Tok.GTE}
-_ARITH_OPS = {Tok.ADD, Tok.SUB, Tok.MUL, Tok.DIV}
+_CMP = {
+    Tok.EQ: _operator.eq, Tok.NEQ: _operator.ne, Tok.LT: _operator.lt,
+    Tok.LTE: _operator.le, Tok.GT: _operator.gt, Tok.GTE: _operator.ge,
+}
+_ARITH = {Tok.ADD: _operator.add, Tok.SUB: _operator.sub, Tok.MUL: _operator.mul}
+_CMP_OPS = set(_CMP)
+_ARITH_OPS = {*_ARITH, Tok.DIV}
 _BOOLISH_OPS = {Tok.AND, Tok.OR, Tok.EQ, Tok.NEQ}
 
 
@@ -180,13 +187,18 @@ class ExprCompiler:
     NaN-greatest / NaN=NaN semantics instead of the reference's IEEE
     all-false.  Declaring the column buys reference parity at the cost
     of a per-comparison NaN guard (which blocks pushdown on that
-    column's predicates only)."""
+    column's predicates only).
+
+    ``calls``: drained aggregate values by ``id`` of their ``ast.Call``
+    node (float64, never null).  Post-aggregate SELECT fields compile
+    with them bound; elsewhere an aggregate call is an error."""
 
     def __init__(self, schema: StructType, non_null=frozenset(),
-                 nan_cols=frozenset()) -> None:
+                 nan_cols=frozenset(), calls=None) -> None:
         self.schema = schema
         self.non_null = frozenset(non_null)
         self.nan_cols = frozenset(nan_cols)
+        self.calls = calls or {}
         # Relaxed mode (set only while compiling an OR-free predicate):
         # the reference's false-vs-nil distinction is observable *only*
         # through an enclosing OR (eval.go:146: `bool OR nil` → false
@@ -221,9 +233,11 @@ class ExprCompiler:
         if isinstance(expr, ast.BinaryExpr):
             return self._compile_binary(expr)
         if isinstance(expr, ast.Call):
-            raise JeplCompileError(
-                f"aggregate call {expr} not allowed in this context"
-            )
+            if id(expr) not in self.calls:
+                raise JeplCompileError(
+                    f"aggregate call {expr} not allowed in this context"
+                )
+            return CExpr(self.calls[id(expr)], JType.FLOAT, nullable=False)
         # bare literal containing no refs is handled by the fold above
         return _lit_cexpr(_oracle_eval(expr, None))
 
@@ -259,7 +273,7 @@ class ExprCompiler:
     @staticmethod
     def _as_double(ce: CExpr) -> Column:
         if ce.jtype in (JType.FLOAT, JType.INT):
-            return ce.col.cast("double")
+            return ce.col
         if ce.jtype is JType.JSONANY:
             return ce.col.try_cast("double")
         return F.lit(None).cast("double")
@@ -363,10 +377,12 @@ class ExprCompiler:
             if lhs.nullable:
                 col = F.when(lhs.col.isNull(), F.lit(None)).otherwise(col)
             return CExpr(col, JType.BOOL, nullable=lhs.nullable)
-        res = (lhs.col == rc) if op is Tok.EQ else (lhs.col != rc)
-        return self._guarded(lhs, rhs, rc, res)
+        return self._guarded(lhs, rhs, rc, _CMP[op](lhs.col, rc))
 
     def _numeric_lhs(self, op: Tok, lhs: CExpr, rhs: CExpr) -> CExpr:
+        # no-op casts (FLOAT/INT Columns are DoubleType) that Catalyst
+        # drops; without them it rewrites NaN-guarded comparisons into a
+        # different, equivalent optimized plan
         lc = lhs.col.cast("double")
         if rhs.jtype in (JType.FLOAT, JType.INT):
             rc = rhs.col.cast("double")
@@ -381,10 +397,7 @@ class ExprCompiler:
                 if lhs.nullable:
                     col = F.when(lhs.col.isNull(), F.lit(None)).otherwise(col)
                 return CExpr(col, JType.BOOL, nullable=lhs.nullable)
-            res = {
-                Tok.EQ: lc == rc, Tok.NEQ: lc != rc, Tok.LT: lc < rc,
-                Tok.LTE: lc <= rc, Tok.GT: lc > rc, Tok.GTE: lc >= rc,
-            }[op]
+            res = _CMP[op](lc, rc)
             if lhs.maybe_nan or rhs.maybe_nan:
                 # Go float comparisons are IEEE: NaN op x → false,
                 # NaN != x → true.  Spark instead orders NaN greatest
@@ -408,15 +421,9 @@ class ExprCompiler:
             # arithmetic can surface NaN (0/0, Inf−Inf, overflow×0) —
             # JSON field values themselves never are (no NaN in JSON)
             arith_null = lhs.nullable or rhs.nullable
-            if op is Tok.ADD:
-                return CExpr(lc + rc, JType.FLOAT, nullable=arith_null,
-                             maybe_nan=True)
-            if op is Tok.SUB:
-                return CExpr(lc - rc, JType.FLOAT, nullable=arith_null,
-                             maybe_nan=True)
-            if op is Tok.MUL:
-                return CExpr(lc * rc, JType.FLOAT, nullable=arith_null,
-                             maybe_nan=True)
+            if op is not Tok.DIV:
+                return CExpr(_ARITH[op](lc, rc), JType.FLOAT,
+                             nullable=arith_null, maybe_nan=True)
             # DIV — reference typed dispatch (see module docstring):
             # int-literal lhs ÷ 0.0 → 0.0 (eval.go:227-231, the one live
             # guard); float lhs ÷ 0 → Go float division: ±Inf with BOTH
@@ -426,7 +433,7 @@ class ExprCompiler:
                 zero_case = F.lit(0.0)
             else:
                 zero_case = _float_div_zero_case(lc, rc)
-            if lhs.nullable or rhs.nullable:
+            if arith_null:
                 col = (
                     F.when(lc.isNull() | rc.isNull(), F.lit(None))
                     .when(rc == 0.0, zero_case)
@@ -434,15 +441,14 @@ class ExprCompiler:
                 )
             else:
                 col = F.when(rc == 0.0, zero_case).otherwise(lc / rc)
-            return CExpr(col, JType.FLOAT,
-                         nullable=lhs.nullable or rhs.nullable, maybe_nan=True)
+            return CExpr(col, JType.FLOAT, nullable=arith_null, maybe_nan=True)
 
         return _NIL()  # AND/OR over numbers → nil (`4 AND 5`)
 
     def _string_lhs(self, op: Tok, lhs: CExpr, rhs: CExpr) -> CExpr:
         if op in (Tok.EQ, Tok.NEQ):
             if rhs.jtype in (JType.STRING, JType.JSONANY):
-                res = (lhs.col == rhs.col) if op is Tok.EQ else (lhs.col != rhs.col)
+                res = _CMP[op](lhs.col, rhs.col)
                 return self._guarded(lhs, rhs, rhs.col, res)
             col = F.lit(False)
             if lhs.nullable:
@@ -471,10 +477,8 @@ class ExprCompiler:
                 ld = lhs.col.try_cast("double")
                 rd = rhs.col.try_cast("double")
                 both_num = ld.isNotNull() & rd.isNotNull()
-                if op is Tok.EQ:
-                    res = F.when(both_num, ld == rd).otherwise(lhs.col == rhs.col)
-                else:
-                    res = F.when(both_num, ld != rd).otherwise(lhs.col != rhs.col)
+                cmp = _CMP[op]
+                res = F.when(both_num, cmp(ld, rd)).otherwise(cmp(lhs.col, rhs.col))
                 return self._guarded(lhs, rhs, rhs.col, res)
             return self._numeric_lhs(op, self._json_num(lhs), rhs)
         if rhs.jtype is JType.STRING:
@@ -494,7 +498,7 @@ class ExprCompiler:
         if lhs.jtype is JType.NIL:
             return _NIL()
         if lhs.jtype in (JType.FLOAT, JType.INT):
-            lc, elems = lhs.col.cast("double"), floats
+            lc, elems = lhs.col, floats
         elif lhs.jtype is JType.STRING:
             lc, elems = lhs.col, strings
         elif lhs.jtype is JType.JSONANY:

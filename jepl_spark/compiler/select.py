@@ -7,10 +7,17 @@ whole-stage codegen, no Python on the hot path:
 
     groupBy(dims over the UNFILTERED frame)        ← group keys are
         .agg(agg(when(matched, arg)) ...)            enumerated pre-WHERE
-                                                     (quirk §2.9.6)
+        .select(post-aggregate fields)               (quirk §2.9.6)
 
-With no GROUP BY the plan pre-filters instead (predicate reaches the
-scan via Catalyst pushdown) since zero-match groups cannot arise.
+With no GROUP BY (and no window) the plan pre-filters instead, so the
+predicate reaches the scan via Catalyst pushdown, and aggregates the
+same arguments unconditionally, since zero-match groups cannot arise.
+
+A rule is compiled once: ``compile_select_parts`` compiles the WHERE
+predicate, the dimensions, each aggregate's argument and the
+post-aggregate fields a single time, and ``CompiledSelect.plan`` is the
+one groupBy → agg → select assembly that the batch plan and
+``streaming.windows.windowed_select`` share.
 
 Aggregate semantics (eval.go:307-365, quirks §2.9.1-5):
 - count(f)  = number of matched rows (field existence irrelevant)
@@ -24,24 +31,27 @@ Aggregate semantics (eval.go:307-365, quirks §2.9.1-5):
   an order-dependent interpreter, and Spark's max treats NaN as
   greatest.  The reference corpus never aggregates a NaN.)
 - post-aggregate arithmetic over call results (float64 in the
-  reference), so ÷0 follows the float path: ±Inf / NaN — except an
-  int-LITERAL lhs, whose ÷float-0.0 yields 0.0 (eval.go:227-231; see
+  reference) compiles through ``ExprCompiler`` with each call bound to
+  its drained value, so ÷0 follows the float path: ±Inf / NaN — except
+  an int-LITERAL lhs, whose ÷float-0.0 yields 0.0 (eval.go:227-231; see
   oracle.py for why the other zero-guards are dead code)
 """
 
 from __future__ import annotations
 
 import re as _re
+from typing import Callable, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..lang import ast
-from ..lang.tokens import Tok
-from ..oracle import eval_expr as _oracle_eval
 from .expr import ExprCompiler, JeplCompileError
+from .types import JType
 
-_SUPPORTED_AGGS = {"count", "sum", "avg", "max", "min"}
+# avg aggregates the sum; its drained value divides by the match count
+_AGG_FNS = {"sum": F.sum, "avg": F.sum, "max": F.max, "min": F.min}
 
 
 def _sanitize(name: str) -> str:
@@ -49,108 +59,67 @@ def _sanitize(name: str) -> str:
 
 
 class CompiledSelect:
-    """Carrier for the pieces of a compiled SELECT, so the streaming
-    layer can re-assemble them around windows/watermarks."""
+    """A SELECT compiled once, ready to be planned over a frame.
+
+    ``matched`` is the WHERE predicate and ``dim_cols`` the named GROUP
+    BY keys.  ``aggregates`` holds one ``(column name, aggregate
+    function, compiled argument)`` per output aggregate: the
+    matched-row count first, then one per non-count call.  ``fields``
+    are the aliased post-aggregate output Columns, which read those
+    columns.  The internal names (the aggregate columns and
+    ``window_name``) avoid every dimension name."""
 
     def __init__(
         self,
-        stmt: ast.SelectStatement,
         matched: Column,
         dim_cols: list[tuple[str, Column]],
-        agg_exprs: list[Column],
-        post_select: "PostSelect",
+        aggregates: list[tuple[str, Callable[[Column], Column], Column]],
+        fields: list[Column],
+        window_name: str,
     ) -> None:
-        self.stmt = stmt
         self.matched = matched
         self.dim_cols = dim_cols
-        self.agg_exprs = agg_exprs
-        self.post_select = post_select
-
-
-class PostSelect:
-    """Builds the final projection from aggregated intermediate columns."""
-
-    def __init__(
-        self,
-        call_columns: dict[int, str],
-        fields: list[ast.Field],
-        names: list[str],
-    ) -> None:
-        self.call_columns = call_columns  # id(Call) → intermediate col name
+        self.aggregates = aggregates
         self.fields = fields
-        self.names = names
+        self.window_name = window_name
 
-    def columns(self, group_names: list[str]) -> list[Column]:
-        out = [F.col(f"`{g}`") for g in group_names]
-        for f, name in zip(self.fields, self.names):
-            out.append(self._field_expr(f.expr).alias(name))
-        return out
-
-    def _call_value(self, call: ast.Call) -> Column:
-        base = self.call_columns[id(call)]
-        if call.name == "count":
-            return F.col("__match_count").cast("double")
-        if call.name == "avg":
-            cnt = F.col("__match_count")
-            return (
-                F.when(cnt == 0, F.lit(0.0))
-                .otherwise(F.coalesce(F.col(base), F.lit(0.0)) / cnt)
-            )
-        return F.coalesce(F.col(base), F.lit(0.0))
-
-    def _field_expr(self, expr: ast.Expr) -> Column:
-        col, _ = self._field_expr_typed(expr)
-        return col
-
-    def _field_expr_typed(self, expr: ast.Expr) -> tuple[Column, bool]:
-        """Post-aggregate arithmetic.  Returns (column, is_go_int64).
-        Operands are drained call values (float64, never null) and
-        literals.  Pure-literal subtrees fold through the oracle so Go
-        int64 arithmetic (truncating division, int÷int-0 panic) is
-        exact; where a call is involved the value is float64 and ÷0
-        follows Go float division (±Inf/NaN) — unless the lhs is an
-        int64 literal, the one path where the reference's zero-guard
-        fires and yields 0.0 (eval.go:227-231)."""
-        if not any(isinstance(n, ast.Call) for n in ast.walk(expr)):
-            try:
-                v = _oracle_eval(expr, None)
-            except ZeroDivisionError as e:
-                raise JeplCompileError(str(e)) from None
-            if not isinstance(v, (int, float)) or isinstance(v, bool):
-                raise JeplCompileError(
-                    f"raw (non-aggregate) field {expr} is not executable"
-                )
-            return F.lit(float(v)), isinstance(v, int)
-        if isinstance(expr, ast.Call):
-            return self._call_value(expr), False
-        if isinstance(expr, ast.ParenExpr):
-            return self._field_expr_typed(expr.expr)
-        if isinstance(expr, ast.BinaryExpr):
-            lc, lint = self._field_expr_typed(expr.lhs)
-            rc, _ = self._field_expr_typed(expr.rhs)
-            if expr.op is Tok.ADD:
-                return lc + rc, False
-            if expr.op is Tok.SUB:
-                return lc - rc, False
-            if expr.op is Tok.MUL:
-                return lc * rc, False
-            if expr.op is Tok.DIV:
-                if lint:  # int64 literal ÷ float64 → live 0.0 guard
-                    zero_case = F.lit(0.0)
-                else:  # float64 ÷ 0 → Go float division, signs included
-                    from .expr import _float_div_zero_case
-
-                    zero_case = _float_div_zero_case(lc, rc)
-                return F.when(rc == 0.0, zero_case).otherwise(lc / rc), False
-            raise JeplCompileError(f"operator {expr.op} invalid in SELECT field")
-        raise JeplCompileError(
-            f"raw (non-aggregate) field {expr} is not executable"
-        )
+    def plan(self, df: DataFrame, window: Optional[Column] = None) -> DataFrame:
+        """groupBy → agg → select over ``df``.  With dims or a ``window``
+        the aggregates are conditioned on ``matched`` over the
+        unfiltered frame, so groups are enumerated pre-WHERE.  Without
+        either, the frame is filtered first (the predicate pushes down
+        to the scan) and the aggregates run unconditionally; the global
+        aggregate still yields exactly one all-zeros row when nothing
+        matches, as the reference does.  A window adds leading
+        ``window_start`` / ``window_end`` columns."""
+        keys = [c.alias(n) for n, c in self.dim_cols]
+        lead: list[Column] = []
+        if window is not None:
+            keys.insert(0, window.alias(self.window_name))
+            lead = [F.col(f"{self.window_name}.{b}").alias(f"window_{b}")
+                    for b in ("start", "end")]
+        if not keys:
+            df = df.filter(self.matched)
+        aggs = [
+            fn(F.when(self.matched, arg) if keys else arg).alias(name)
+            for name, fn, arg in self.aggregates
+        ]
+        dims = [F.col(f"`{n}`") for n, _ in self.dim_cols]
+        return df.groupBy(*keys).agg(*aggs).select(*lead, *dims, *self.fields)
 
 
 def compile_select_parts(
     stmt: ast.SelectStatement, compiler: ExprCompiler
 ) -> CompiledSelect:
+    if stmt.condition is None:
+        # EvalSQL dereferences the condition before anything else
+        # (eval.go:41 / groupby.go:36) and crashes on WHERE-less rules;
+        # the repo oracle raises the same way — silently executing a
+        # match-all here would be an untestable divergence (SURVEY §2.9.7)
+        raise JeplCompileError(
+            "WHERE is required: the reference crashes on WHERE-less "
+            "rules (eval.go:41)"
+        )
     calls: list[ast.Call] = []
     for f in stmt.fields:
         calls.extend(n for n in ast.walk(f.expr) if isinstance(n, ast.Call))
@@ -160,7 +129,7 @@ def compile_select_parts(
             "reference interpreter crashes on them at drain (eval.go:22)"
         )
     for c in calls:
-        if c.name not in _SUPPORTED_AGGS:
+        if c.name != "count" and c.name not in _AGG_FNS:
             raise JeplCompileError(
                 f"unsupported aggregate function {c.name}() — the reference "
                 f"evaluates only count/sum/avg/max/min (eval.go:316-360)"
@@ -168,21 +137,22 @@ def compile_select_parts(
 
     matched = compiler.compile_predicate(stmt.condition)
 
-    # dimensions (group keys)
-    dim_cols: list[tuple[str, Column]] = []
     used: set[str] = set()
-    for i, d in enumerate(stmt.dimensions):
-        if isinstance(d.expr, ast.VarRef):
-            name = _sanitize(d.expr.val)
-        else:
-            name = f"dim_{i}"
+
+    def fresh(name: str) -> str:
         while name in used:
             name += "_"
         used.add(name)
-        dim_ce = compiler.compile(d.expr)
-        from .types import JType as _JT
+        return name
 
-        if dim_ce.jtype in (_JT.REGEX, _JT.LIST, _JT.NIL):
+    # dimensions (group keys)
+    dim_cols: list[tuple[str, Column]] = []
+    for i, d in enumerate(stmt.dimensions):
+        name = fresh(
+            _sanitize(d.expr.val) if isinstance(d.expr, ast.VarRef) else f"dim_{i}"
+        )
+        dim_ce = compiler.compile(d.expr)
+        if dim_ce.jtype in (JType.REGEX, JType.LIST, JType.NIL):
             # NIL included: a dimension missing from the schema would
             # silently form one NULL-keyed group here, while the
             # reference dereferences a nil Expr and panics
@@ -208,85 +178,51 @@ def compile_select_parts(
                 )),
             ).otherwise(dim_col)
         dim_cols.append((name, dim_col))
+    count_name = fresh("__match_count")
+    window_name = fresh("__window")
 
-    # aggregate expressions
-    agg_exprs: list[Column] = [
-        F.count(F.when(matched, F.lit(1))).alias("__match_count")
-    ]
-    call_columns: dict[int, str] = {}
+    # aggregate arguments, and each call's drained value: float64,
+    # never null (an empty aggregate drains to 0.0)
+    zero = F.lit(0.0)
+    count = F.col(count_name)
+    matches = count.cast("double")
+    aggregates = [(count_name, F.count, F.lit(1))]
+    drained: dict[int, Column] = {}
     for i, c in enumerate(calls):
-        colname = f"__agg_{i}"
-        call_columns[id(c)] = colname
         if c.name == "count":
-            continue  # uses __match_count
+            drained[id(c)] = matches
+            continue
+        name = fresh(f"__agg_{i}")
         arg = compiler.compile_numeric(c.args[0])
-        if c.name in ("sum", "avg"):
-            agg_exprs.append(F.sum(F.when(matched, arg)).alias(colname))
-        elif c.name == "max":
-            agg_exprs.append(
-                F.max(F.when(matched, F.coalesce(arg, F.lit(0.0)))).alias(colname)
-            )
-        elif c.name == "min":
-            agg_exprs.append(
-                F.min(F.when(matched, F.coalesce(arg, F.lit(0.0)))).alias(colname)
-            )
+        if c.name in ("max", "min"):
+            arg = F.coalesce(arg, zero)
+        aggregates.append((name, _AGG_FNS[c.name], arg))
+        value = F.coalesce(F.col(name), zero)
+        if c.name == "avg":
+            value = F.when(count == 0, zero).otherwise(value / count)
+        drained[id(c)] = value
 
-    post = PostSelect(call_columns, stmt.fields, stmt.column_names())
-    return CompiledSelect(stmt, matched, dim_cols, agg_exprs, post)
+    # post-aggregate fields: the aggregated row holds no raw fields,
+    # only the drained calls
+    post = ExprCompiler(StructType([]), calls=drained)
+    fields: list[Column] = []
+    for f, alias in zip(stmt.fields, stmt.column_names()):
+        ce = post.compile(f.expr)
+        if ce.jtype not in (JType.FLOAT, JType.INT):
+            raise JeplCompileError(f"SELECT field {f.expr} is not a number")
+        fields.append(ce.col.alias(alias))
+    return CompiledSelect(matched, dim_cols, aggregates, fields, window_name)
 
 
 def compile_select(
     stmt: ast.SelectStatement, df: DataFrame, non_null=frozenset(),
     nan_cols=frozenset(),
 ) -> DataFrame:
-    """Batch plan.  With dims: conditional aggregation over the
-    unfiltered frame (group enumeration pre-WHERE).  Without dims:
-    pre-filter so the predicate pushes down to the scan, then a single
-    global aggregate (which still yields exactly one all-zeros row when
-    nothing matches, as the reference does).
+    """Batch plan (see ``CompiledSelect.plan``).
 
     ``non_null``: caller-declared never-null columns (see ExprCompiler)
     — lets OR-predicates compile guard-free and push into the scan.
     ``nan_cols``: caller-declared may-hold-stored-NaN float columns —
     buys IEEE comparison parity for parquet NaN data (see ExprCompiler)."""
-    _require_where(stmt)
     compiler = ExprCompiler(df.schema, non_null=non_null, nan_cols=nan_cols)
-    parts = compile_select_parts(stmt, compiler)
-
-    if parts.dim_cols:
-        grouped = df.groupBy(
-            *[c.alias(n) for n, c in parts.dim_cols]
-        ).agg(*parts.agg_exprs)
-        group_names = [n for n, _ in parts.dim_cols]
-        return grouped.select(*parts.post_select.columns(group_names))
-
-    # no dims → prefilter (predicate pushdown) + global aggregate
-    filtered = df.filter(parts.matched)
-    # re-compile aggregates with matched ≡ true over the filtered frame
-    true_parts = compile_select_parts(
-        _with_condition_true(stmt),
-        ExprCompiler(df.schema, non_null=non_null, nan_cols=nan_cols),
-    )
-    agged = filtered.agg(*true_parts.agg_exprs)
-    return agged.select(*true_parts.post_select.columns([]))
-
-
-def _require_where(stmt: ast.SelectStatement) -> None:
-    """WHERE is effectively mandatory: EvalSQL dereferences the
-    condition before anything else (eval.go:41 / groupby.go:36) and
-    crashes on WHERE-less rules; the repo oracle raises the same way —
-    silently executing a match-all here would be an untestable
-    divergence (SURVEY §2.9.7)."""
-    if stmt.condition is None:
-        raise JeplCompileError(
-            "WHERE is required: the reference crashes on WHERE-less "
-            "rules (eval.go:41)"
-        )
-
-
-def _with_condition_true(stmt: ast.SelectStatement) -> ast.SelectStatement:
-    import copy
-
-    clone = copy.copy(stmt)
-    clone.condition = None
-    return clone
+    return compile_select_parts(stmt, compiler).plan(df)

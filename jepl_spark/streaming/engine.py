@@ -5,15 +5,16 @@ Pipeline (SURVEY.md §3.4):
     readStream (file/Iceberg source)
       → withWatermark(event_time, delay)
       → [stream-stream join]                (join.py)
-      → groupBy(window(...), dims)
-      → agg(when(matched, …) …)             (compiler/select.py parts)
-      → select(post-agg arithmetic, aliases)
+      → groupBy(window(...), dims)          ┐ CompiledSelect.plan
+      → agg(when(matched, …) …)             │ (compiler/select.py),
+      → select(post-agg arithmetic, aliases)┘ rule compiled once per start
       → writeStream.foreachBatch(exactly-once sink).option(checkpoint)
 
-The conditional-aggregation shape is identical to the batch plan, so
-batch goldens and streaming goldens share the same compiled core; what
-streaming adds is window close/emission semantics driven by the
-watermark (append mode) and checkpointed state.
+``windowed_select`` and the grouped batch plan run the same compiled
+rule through the same groupBy → agg → select assembly, so batch
+goldens and streaming goldens share one compiled core; what streaming
+adds is window close/emission semantics driven by the watermark
+(append mode) and checkpointed state.
 """
 
 from __future__ import annotations

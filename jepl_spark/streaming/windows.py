@@ -20,8 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..compiler.expr import ExprCompiler
-from ..compiler.select import _require_where, compile_select_parts
-from ..lang import ast
+from ..compiler.select import compile_select_parts
 from ..lang.parser import parse_statement
 
 
@@ -73,23 +72,8 @@ def windowed_select(
         if isinstance(stmt_or_sql, str)
         else stmt_or_sql
     )
-    _require_where(stmt)  # reference crashes on WHERE-less rules
     df = ensure_event_timestamp(df, ts_col)
     if watermark is not None:
         df = df.withWatermark(ts_col, watermark)
-
-    compiler = ExprCompiler(df.schema, non_null=non_null)
-    parts = compile_select_parts(stmt, compiler)
-
-    win = window_column(ts_col, duration, slide, session_gap)
-    group_cols = [win.alias("__window")] + [
-        c.alias(n) for n, c in parts.dim_cols
-    ]
-    grouped = df.groupBy(*group_cols).agg(*parts.agg_exprs)
-
-    group_names = [n for n, _ in parts.dim_cols]
-    out_cols = [
-        F.col("__window.start").alias("window_start"),
-        F.col("__window.end").alias("window_end"),
-    ] + parts.post_select.columns(group_names)
-    return grouped.select(*out_cols)
+    parts = compile_select_parts(stmt, ExprCompiler(df.schema, non_null=non_null))
+    return parts.plan(df, window_column(ts_col, duration, slide, session_gap))

@@ -88,6 +88,117 @@ def test_column_name_conflicts(spark):
     )
 
 
+@pytest.mark.parametrize("sql", [
+    "select count(v), sum(v) from t where v > 0 group by __match_count",
+    "select sum(v), count(v) from t where v > 0 group by __agg_0",
+])
+def test_dimension_named_like_an_internal_column(spark, sql):
+    """A GROUP BY dimension may take any name the compiler uses for its
+    own intermediate columns."""
+    dim = sql.rsplit(" ", 1)[1]
+    schema = StructType(
+        [StructField("v", DoubleType()), StructField(dim, DoubleType())]
+    )
+    docs = [{"v": 5.0, dim: 1.0}, {"v": 7.0, dim: 1.0},
+            {"v": 9.0, dim: 2.0}, {"v": -1.0, dim: 2.0}]
+    assert_matches_oracle(spark, sql, docs, schema)
+
+
+def test_windowed_dimension_named_like_the_window(spark):
+    """Likewise for the window column of a windowed plan."""
+    from jepl_spark.streaming.windows import windowed_select
+
+    df = spark.createDataFrame(
+        [(2.0, 1.0, 0), (3.0, 1.0, 600), (-1.0, 2.0, 600), (5.0, 1.0, 4000)],
+        "v double, __window double, t long",
+    ).withColumn("ts", F.timestamp_seconds("t"))
+    out = windowed_select(
+        "select sum(v) AS s, count(v) AS n from t where v > 0 group by __window",
+        df, ts_col="ts", duration="1 hour",
+    )
+    rows = {
+        (r[0], r[1]): (r[2], r[3])
+        for r in out.select(F.col("window_start").cast("long"), "__window",
+                            "s", "n").collect()
+    }
+    assert rows == {(0, 1.0): (5.0, 2.0), (0, 2.0): (0.0, 0.0),
+                    (3600, 1.0): (5.0, 1.0)}
+
+
+COMPILE_ONCE_RULES = [
+    "select sum(tcp.in_bytes) / count(uid) AS r, max(tcp.in_pkts) AS m "
+    "from packetbeat where uid = 1 OR tcp.src_ip = 0",
+    "select sum(tcp.in_bytes) / count(uid) AS r, max(tcp.in_pkts) AS m "
+    "from packetbeat where uid = 1 OR tcp.src_ip = 0 group by tcp.dst_ip",
+]
+
+
+def test_rule_compiles_each_node_once(spark, monkeypatch):
+    from jepl_spark.compiler.select import compile_select
+    from jepl_spark.lang.parser import parse_statement
+
+    df = docs_to_df(spark, PACKETBEAT_DOCS, PACKETBEAT_SCHEMA)
+    compiled = []
+    compile_ = ExprCompiler.compile
+
+    def counting(self, expr):
+        compiled.append(expr)
+        return compile_(self, expr)
+
+    monkeypatch.setattr(ExprCompiler, "compile", counting)
+    for sql in COMPILE_ONCE_RULES:
+        compiled.clear()
+        compile_select(parse_statement(sql), df)
+        twice = [str(e) for e in compiled if sum(x is e for x in compiled) > 1]
+        assert not twice, (sql, twice)
+
+
+#: Py4J commands one warm compile of COMPILE_ONCE_RULES[0] may send.
+#: Compiled once it sends about 585; compiling the aggregate arguments a
+#: second time, as an unconditional copy, sent 837.
+COMPILE_PY4J_BOUND = 700
+
+
+def test_compile_select_py4j_commands(spark, monkeypatch):
+    import threading
+
+    from jepl_spark.compiler.select import compile_select
+    from jepl_spark.lang.parser import parse_statement
+
+    df = docs_to_df(spark, PACKETBEAT_DOCS, PACKETBEAT_SCHEMA)
+    stmt = parse_statement(COMPILE_ONCE_RULES[0])
+    compile_select(stmt, df)  # warm the schema and Py4J's class lookups
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    me = threading.get_ident()
+    sent = 0
+
+    def counting(*args, **kwargs):
+        nonlocal sent
+        sent += threading.get_ident() == me
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    compile_select(stmt, df)
+    monkeypatch.undo()
+    assert 0 < sent <= COMPILE_PY4J_BOUND, sent
+
+
+def test_no_dims_plan_evaluates_predicate_only_in_filter(spark):
+    """Without GROUP BY the predicate runs once, in the Filter under
+    the aggregate; the aggregates themselves carry no condition."""
+    from jepl_spark.compiler.select import compile_select
+    from jepl_spark.lang.parser import parse_statement
+
+    df = docs_to_df(spark, PACKETBEAT_DOCS, PACKETBEAT_SCHEMA)
+    plan = compile_select(parse_statement(COMPILE_ONCE_RULES[0]), df)
+    lines = plan._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    aggregate = [l for l in lines if "Aggregate [" in l]
+    where = [l for l in lines if "Filter " in l]
+    assert len(aggregate) == 1 and "CASE WHEN" not in aggregate[0], aggregate
+    assert len(where) == 1 and "CASE WHEN" in where[0], where
+
+
 def test_agg_arg_arithmetic_div0(spark):
     # float ÷ 0 inside aggregate args follows Go float division
     # (quirk §2.9.5): doc0 contributes 0/0 → NaN, even docs ±Inf —
@@ -423,6 +534,19 @@ def test_postagg_div_zero_inf(spark):
         docs,
         schema,
     )
+
+
+@pytest.mark.parametrize("field", ["sum(v) + 'a'", "sum(v) / (4 / 0)"])
+def test_postagg_field_rejected(spark, field):
+    """A post-aggregate field that is not a number, or that divides an
+    int by int 0 in a constant subtree, is rejected at compile."""
+    from jepl_spark.compiler.expr import JeplCompileError
+    from jepl_spark.compiler.select import compile_select
+    from jepl_spark.lang.parser import parse_statement
+
+    df = docs_to_df(spark, [{"v": 1.0}], StructType([StructField("v", DoubleType())]))
+    with pytest.raises(JeplCompileError):
+        compile_select(parse_statement(f"select {field} from t where v > 0"), df)
 
 
 def test_groupby_nil_dimension_rejected(spark):

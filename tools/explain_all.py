@@ -13,10 +13,16 @@ Checks printed per query:
   Python paths)
 - plan_chars: the length of the optimized logical plan string, where
   an expression re-inlined many times into one projection shows up
+- plan_sha: the first 12 hex digits of the SHA-1 of the optimized
+  logical plan with the session's counters stripped: expression ids
+  (#12, #12L), lambda-variable suffixes (lambda x_3) and plan ids
+  (plan_id=9902); equal across two trees means the change left the
+  plan alone
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
 import sys
 
@@ -105,7 +111,7 @@ def main() -> int:
             )
             qe = df._jdf.queryExecution()
             plan = qe.explainString(mode)
-            plan_chars = len(qe.optimizedPlan().toString())
+            optimized = qe.optimizedPlan().toString()
         except Exception as e:
             print(f"== {name}: ERROR {e}")
             bad += 1
@@ -120,12 +126,17 @@ def main() -> int:
             f"== {name}: exchanges={n_exchanges} codegen_spans={n_wsc} "
             f"pushed={[p for p in pushed if p][:2]} "
             f"python={'ARROW' if arrow_eval else ('ROW!!' if batch_eval else 'none')} "
-            f"plan_chars={plan_chars}"
+            f"plan_chars={len(optimized)} plan_sha={_plan_sha(optimized)}"
         )
         if batch_eval:
             print(f"   !! row-at-a-time Python detected in {name}")
             bad += 1
     return 1 if bad else 0
+
+
+def _plan_sha(plan: str) -> str:
+    plan = re.sub(r"#\d+L?|(?<=lambda \w)_\d+|(?<=plan_id=)\d+", "", plan)
+    return hashlib.sha1(plan.encode()).hexdigest()[:12]
 
 
 if __name__ == "__main__":
