@@ -380,12 +380,9 @@ class ExprCompiler:
         return self._guarded(lhs, rhs, rc, _CMP[op](lhs.col, rc))
 
     def _numeric_lhs(self, op: Tok, lhs: CExpr, rhs: CExpr) -> CExpr:
-        # no-op casts (FLOAT/INT Columns are DoubleType) that Catalyst
-        # drops; without them it rewrites NaN-guarded comparisons into a
-        # different, equivalent optimized plan
-        lc = lhs.col.cast("double")
+        lc = lhs.col
         if rhs.jtype in (JType.FLOAT, JType.INT):
-            rc = rhs.col.cast("double")
+            rc = rhs.col
         elif rhs.jtype is JType.JSONANY:
             rc = rhs.col.try_cast("double")
         else:

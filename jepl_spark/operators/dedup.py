@@ -1,8 +1,13 @@
 """Deduplication operators for training-data pipelines.
 
-Exact, MinHash+LSH, SimHash, and n-gram-Jaccard variants, all expressed
-with built-in Spark SQL functions (higher-order array lambdas,
-``xxhash64``) — no Python UDFs, no driver-side loops.
+Exact, MinHash+LSH, SimHash, and n-gram-Jaccard variants.  Row-level
+work is built-in Spark SQL (higher-order array lambdas, ``xxhash64``)
+or a vectorized Arrow UDF over whole columns (the shingle, window and
+MinHash kernels over ``_ragged`` / ``_pack``) — no per-row Python.
+Where an input fits the guard (:mod:`._guard`), a step runs on the
+driver instead of in a shuffle: the minhash ``dedup_against`` probe,
+the labeling of a small pair graph in ``near_dup_components``, and the
+index build of ngram's replicated path.
 
 Scale design:
 - exact dedup: one shuffle keyed by content hash (not the full text —
@@ -102,47 +107,6 @@ def simhash_signature_table(
     simhash_hamming_near_dups exposes for SQL-replayable gates."""
     s = sig if sig is not None else simhash64(F.col(text_col))
     return df.select(F.col(id_col), s.alias(SIMHASH_SIG_COL))
-
-
-def _banded_cross_candidates(
-    new_banded: DataFrame,
-    old_banded: DataFrame,
-    max_bucket: int | None,
-) -> DataFrame:
-    """``(__id_new, __id_old)`` pairs sharing ≥1 (band, key) ACROSS two
-    banded ``(__id, __band, __key)`` frames — the cross-corpus sibling
-    of ``banded_candidate_pairs`` (delta joined against a committed
-    snapshot instead of a self-join).  Same scale rules: the hot-bucket
-    cap applies per side BEFORE the join (a boilerplate bucket costs
-    O(G_old·G_new) pairs), only (band, key, id) rides the shuffle —
-    payloads re-attach in the caller — and cross-band duplicates of a
-    pair collapse via distinct."""
-
-    def capped(banded: DataFrame) -> DataFrame:
-        if max_bucket is None:
-            return banded
-        from pyspark.sql.window import Window
-
-        return (
-            banded.withColumn(
-                "__bucket_n",
-                F.count(F.lit(1)).over(Window.partitionBy("__band", "__key")),
-            )
-            .where(F.col("__bucket_n") <= max_bucket)
-            .drop("__bucket_n")
-        )
-
-    n = capped(new_banded).select(
-        "__band", "__key", F.col("__id").alias("__id_new")
-    )
-    o = capped(old_banded).select(
-        "__band", "__key", F.col("__id").alias("__id_old")
-    )
-    return (
-        n.join(o, on=["__band", "__key"], how="inner")
-        .select("__id_new", "__id_old")
-        .distinct()
-    )
 
 
 def _minhash_against_losers_replicated(
@@ -342,18 +306,9 @@ def dedup_against(
             )
 
     else:  # simhash
-        if 64 % sim_bands != 0:
-            raise ValueError(f"sim_bands ({sim_bands}) must divide 64")
-        if max_hamming >= sim_bands:
-            raise ValueError(
-                f"max_hamming ({max_hamming}) must be < sim_bands "
-                f"({sim_bands}): the pigeonhole recall guarantee needs "
-                f"one untouched band per qualifying pair"
-            )
-        width = 64 // sim_bands
-        mask = (1 << width) - 1
-        cap = None if max_band_bucket == "auto" else max_band_bucket
         sig_col = SIMHASH_SIG_COL
+        slices = _simhash_bands(F.col(sig_col), sim_bands, max_hamming)
+        cap = None if max_band_bucket == "auto" else max_band_bucket
 
         def build_sigs(frame: DataFrame, tcol: str) -> DataFrame:
             s = sig if frame is df and sig is not None else None
@@ -362,14 +317,7 @@ def dedup_against(
         def band_of(sigs: DataFrame) -> DataFrame:
             return sigs.select(
                 F.col(id_col).alias("__id"),
-                F.posexplode(
-                    F.array(*[
-                        F.shiftrightunsigned(
-                            F.col(sig_col), width * b
-                        ).bitwiseAND(F.lit(mask))
-                        for b in range(sim_bands)
-                    ])
-                ).alias("__band", "__key"),
+                F.posexplode(slices).alias("__band", "__key"),
             )
 
         def qualifies(sa: Column, sb: Column) -> Column:
@@ -401,8 +349,20 @@ def dedup_against(
                 threshold, num_hashes,
             )
     if losers is None:
-        cands = _banded_cross_candidates(
-            band_of(new_sigs), band_of(old_sigs), cap
+        # the delta-vs-snapshot join: each side capped on its own
+        # bucket counts, only (band, key, id) rides the shuffle, and
+        # cross-band duplicates of a pair collapse before signatures
+        # re-attach
+        n = _cap_buckets(band_of(new_sigs), cap).select(
+            "__band", "__key", F.col("__id").alias("__id_new")
+        )
+        o = _cap_buckets(band_of(old_sigs), cap).select(
+            "__band", "__key", F.col("__id").alias("__id_old")
+        )
+        cands = (
+            n.join(o, on=["__band", "__key"], how="inner")
+            .select("__id_new", "__id_old")
+            .distinct()
         )
         sa = new_sigs.select(
             F.col(id_col).alias("__id_new"), F.col(sig_col).alias("__sa")
@@ -675,18 +635,41 @@ def word_shingle_hashes(text: Column, n: int = 3) -> Column:
     )
 
 
+def _cap_buckets(banded: DataFrame, max_bucket: int | None) -> DataFrame:
+    """The hot-bucket cap: drop the rows of a banded
+    ``(__id, __band, __key)`` frame whose (band, key) bucket holds more
+    than ``max_bucket`` rows (``None`` keeps all).  Bucket sizes come
+    from ``count() OVER (PARTITION BY __band, __key)``: one exchange,
+    no groupBy + join back, and its partitioning is exactly the band
+    join's key, so the join after it reuses the exchange."""
+    if max_bucket is None:
+        return banded
+    from pyspark.sql.window import Window
+
+    return (
+        banded.withColumn(
+            "__bucket_n",
+            F.count(F.lit(1)).over(Window.partitionBy("__band", "__key")),
+        )
+        .where(F.col("__bucket_n") <= max_bucket)
+        .drop("__bucket_n")
+    )
+
+
 def banded_candidate_pairs(
     banded: DataFrame,
     max_bucket: int | None,
     dedup: bool = True,
 ) -> DataFrame:
     """Candidate id pairs from a banded ``(__id, __band, __key)`` frame —
-    the shared core of the MinHash / embedding-LSH / SimHash-Hamming
-    candidate generators, so the scale lessons live in ONE place:
+    the self-join core of the MinHash / embedding-LSH / SimHash-Hamming
+    candidate generators (``dedup_against`` joins a delta against a
+    snapshot with the same cap):
 
     - the hot-bucket cap (``max_bucket``; ``None`` disables) is applied
-      BEFORE the self-join — the explicit skew control that keeps a
-      boilerplate bucket from turning into an O(bucket²) task;
+      BEFORE the self-join (:func:`_cap_buckets`) — the explicit skew
+      control that keeps a boilerplate bucket from turning into an
+      O(bucket²) task;
     - only (band, key, id) rides the self-join shuffle — payloads
       (signatures / vectors) re-attach to the resulting pair set in the
       caller;
@@ -694,20 +677,7 @@ def banded_candidate_pairs(
       when each id provably emits one band, e.g. single-table LSH).
 
     Returns (id_a, id_b) with id_a < id_b."""
-    from pyspark.sql.window import Window
-
-    if max_bucket is not None:
-        # bucket sizes via count() OVER (PARTITION BY band, key): one
-        # exchange, no groupBy+join back, and the window's partitioning
-        # is exactly the self-join key so the join below reuses it
-        banded = (
-            banded.withColumn(
-                "__bucket_n",
-                F.count(F.lit(1)).over(Window.partitionBy("__band", "__key")),
-            )
-            .where(F.col("__bucket_n") <= max_bucket)
-            .drop("__bucket_n")
-        )
+    banded = _cap_buckets(banded, max_bucket)
     a = banded.select("__band", "__key", F.col("__id").alias("id_a"))
     b = banded.select("__band", "__key", F.col("__id").alias("id_b"))
     pairs = (
@@ -990,10 +960,11 @@ def near_dup_components(
     jumps: int = 2,
 ) -> DataFrame:
     """Connected components over a near-duplicate candidate-pair edge
-    list: returns ``(id, component)`` for every id that appears in
+    list: returns ``(id, component)`` for every id with an edge in
     ``pairs``, where ``component`` is the SMALLEST id reachable through
     the (undirected) pair graph — the canonical representative of each
-    fuzzy cluster.
+    fuzzy cluster.  An edge is a pair of two distinct non-null ids: a
+    self-pair ``(x, x)`` or a pair with a NULL end names no id.
 
     Why this exists: pair policies ("drop id_b of every qualifying
     pair") retain multiple representatives of one cluster when
@@ -1017,8 +988,9 @@ def near_dup_components(
     frames are ids-only (long, long) shuffles, each round's lineage is
     cut by ``localCheckpoint``, and the monotone fixpoint (no label
     changed) IS the component labeling; a miss within ``max_rounds``
-    raises.  An edge set that fits the guard (16 bytes per edge) runs
-    the same pointer jumping in one task instead (``_components_local``).
+    raises.  An edge list that fits the guard (16 bytes per edge)
+    collects once and the driver runs the same pointer jumping instead
+    (``_components_local``); the result is then a local relation.
     """
     if jumps < 1:
         raise ValueError(f"jumps must be >= 1, got {jumps}")
@@ -1028,33 +1000,39 @@ def near_dup_components(
                 f"pair column {c!r} not in input columns {pairs.columns}"
             )
     pairs, back = _long_ids(pairs, (id_a, id_b))
+    # the raw edge list, materialized without a shuffle: a self-loop
+    # joins nothing and a NULL end is no edge, so neither names an id
     edges = (
         pairs.select(
             F.col(id_a).cast("long").alias("src"),
             F.col(id_b).cast("long").alias("dst"),
         )
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .where(
+            F.col("src").isNotNull()
+            & F.col("dst").isNotNull()
+            & (F.col("src") != F.col("dst"))
+        )
+        .localCheckpoint(eager=True)
     )
+    # Small-graph fast path: near-dup pair graphs are typically tiny
+    # vs the corpus (thresholded pairs).  Counting the checkpointed
+    # edges is a block read; when they fit the guard (exactly 16 B per
+    # edge: two longs) they collect once and the driver runs the same
+    # min-label pointer jumping — the distributed loop's ~5 rounds of
+    # multi-stage joins (measured ~1.1 s/round of pure scheduling at
+    # 200k edges) collapse to one collect.  Larger graphs keep the
+    # iterative ids-only rounds below.
+    if fits("near_dup_components", 16 * edges.count()):
+        return back(_components_local(edges), "id", "component")
+    # symmetric, duplicate-free edges; the lazy checkpoint materializes
+    # in the labels job right below, its only consumer there
     edges = (
         edges.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        .where(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
-    # Small-graph fast path: near-dup pair graphs are typically tiny
-    # vs the corpus (thresholded pairs).  The edge set is already
-    # materialized by the checkpoint above, so counting it is a
-    # block-read; when the graph fits the guard's budget it collects
-    # (exactly 16 B/edge: two longs), broadcasts, and ONE executor
-    # task runs in-memory pointer jumping to the exact same min-label
-    # fixpoint — the distributed loop's ~5 rounds of multi-stage joins
-    # (measured ~1.1 s/round of pure scheduling at 200k edges)
-    # collapse to one job.  Larger graphs keep the iterative ids-only
-    # rounds below.
-    if fits("near_dup_components", 16 * edges.count()):
-        return back(_components_local(edges), "id", "component")
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -1120,60 +1098,35 @@ def near_dup_components(
 
 
 def _components_local(edges: DataFrame) -> DataFrame:
-    """Exact min-label connected components of an edge frame that fits
-    the guard, by vectorized pointer jumping in one executor task over
-    ids sorted ascending (min code ⇔ min id) — the distributed loop's
-    monotone fixpoint, so the labeling is identical."""
+    """Exact min-label connected components of a ``(src, dst)`` edge
+    frame that fits the guard, computed on the driver: the edges
+    collect once, and vectorized pointer jumping runs over the ids
+    sorted ascending (min code ⇔ min id), propagating along both
+    directions of each edge.  It reaches the distributed loop's
+    monotone fixpoint, so the labeling is identical; duplicate and
+    reversed edges change no minimum."""
     import numpy as np
     import pyarrow as pa
 
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    spark = edges.sparkSession
-    tbl = edges.toArrow().combine_chunks()
-    if tbl.num_rows == 0:
-        return spark.createDataFrame(
-            [], "id long, component long"
-        )
-    src = tbl.column("src").to_numpy(zero_copy_only=False)
-    dst = tbl.column("dst").to_numpy(zero_copy_only=False)
-    bc = spark.sparkContext.broadcast((src, dst))
-
-    out_schema = StructType([
-        StructField("id", LongType()),
-        StructField("component", LongType()),
-    ])
-
-    def _solve(batches):
-        seen = False
-        for _b in batches:
-            seen = True
-        if not seen:
-            return
-        s, d = bc.value
-        ids = np.unique(np.concatenate([s, d]))  # ascending ⇒ id order
-        u = np.searchsorted(ids, s)
-        v = np.searchsorted(ids, d)
-        lbl = np.arange(ids.size, dtype=np.int64)
-        while True:
-            prev = lbl.copy()
-            nbr = lbl.copy()
-            np.minimum.at(nbr, u, lbl[v])
-            lbl = np.minimum(lbl, nbr)
-            lbl = lbl[lbl]
-            lbl = lbl[lbl]
-            if np.array_equal(lbl, prev):
-                break
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(ids), pa.array(ids[lbl])],
-            names=["id", "component"],
-        )
-
-    out = spark.range(0, 1, 1, 1).mapInArrow(
-        _solve, out_schema
-    ).localCheckpoint(eager=True)
-    bc.unpersist()
-    return out
+    tbl = edges.toArrow()
+    src = tbl.column("src").to_numpy()
+    dst = tbl.column("dst").to_numpy()
+    ids = np.unique(np.concatenate([src, dst]))  # ascending ⇒ id order
+    u = np.searchsorted(ids, src)
+    v = np.searchsorted(ids, dst)
+    lbl = np.arange(ids.size, dtype=np.int64)
+    while True:
+        prev = lbl
+        nbr = lbl.copy()
+        np.minimum.at(nbr, u, lbl[v])
+        np.minimum.at(nbr, v, lbl[u])
+        lbl = nbr[nbr]
+        lbl = lbl[lbl]
+        if np.array_equal(lbl, prev):
+            break
+    out = pa.table({"id": pa.array(ids, pa.int64()),
+                    "component": pa.array(ids[lbl], pa.int64())})
+    return edges.sparkSession.createDataFrame(out)
 
 
 def minhash_dedup(
@@ -1287,6 +1240,30 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
+def _simhash_bands(sig: Column, bands: int, max_hamming: int) -> Column:
+    """The ``bands`` equal-width slices of a packed 64-bit SimHash
+    ``sig``, as one array Column (slice ``b`` = bits
+    ``[b·w, (b+1)·w)``, ``w = 64 / bands``).  Rejects a ``bands`` that
+    does not divide 64 and a ``max_hamming`` ≥ ``bands``: by
+    pigeonhole, fewer than ``bands`` differing bits leave one slice
+    untouched, which is what makes a banded Hamming search lossless."""
+    if 64 % bands != 0:
+        raise ValueError(f"SimHash band count ({bands}) must divide 64")
+    if max_hamming >= bands:
+        raise ValueError(
+            f"max_hamming ({max_hamming}) must be < the SimHash band "
+            f"count ({bands}): the pigeonhole recall guarantee needs one "
+            f"untouched band per qualifying pair — use more, narrower "
+            f"bands instead"
+        )
+    width = 64 // bands
+    mask = (1 << width) - 1
+    return F.array(*[
+        F.shiftrightunsigned(sig, width * b).bitwiseAND(F.lit(mask))
+        for b in range(bands)
+    ])
+
+
 def simhash_hamming_near_dups(
     df: DataFrame,
     text_col: str = "text",
@@ -1325,30 +1302,13 @@ def simhash_hamming_near_dups(
     (n_chars·2³² + n_tokens) a SQL oracle can replay, since no SQL twin
     of xxhash64 exists (and the corpus has no exact dups, which made a
     hash-derived surrogate a vacuous empty gate)."""
-    if 64 % bands != 0:
-        raise ValueError(f"bands ({bands}) must divide 64")
-    if max_hamming >= bands:
-        raise ValueError(
-            f"max_hamming ({max_hamming}) must be < bands ({bands}): the "
-            f"pigeonhole recall guarantee needs one untouched band per "
-            f"qualifying pair — raise bands (narrower slices) instead"
-        )
-    width = 64 // bands
-    mask = (1 << width) - 1
+    slices = _simhash_bands(F.col("__sig"), bands, max_hamming)
     sig_expr = sig if sig is not None else simhash64(F.col(text_col))
     base = df.select(F.col(id_col).alias("__id"), sig_expr.alias("__sig"))
     if materialize:
         base = base.persist()  # feeds banding + both re-attach sides
     banded = base.select(
-        "__id",
-        F.posexplode(
-            F.array(*[
-                F.shiftrightunsigned(F.col("__sig"), width * b).bitwiseAND(
-                    F.lit(mask)
-                )
-                for b in range(bands)
-            ])
-        ).alias("__band", "__key"),
+        "__id", F.posexplode(slices).alias("__band", "__key")
     )
     pairs = banded_candidate_pairs(banded, max_band_bucket)
     sig_a = base.select(F.col("__id").alias("id_a"), F.col("__sig").alias("__sa"))
@@ -1471,14 +1431,7 @@ def stream_simhash_near_dedup(
     ``sig`` overrides the signature expression (any BIGINT column),
     e.g. the SQL-replayable length surrogate the gate uses — xxhash64
     has no SQL twin."""
-    if 64 % bands != 0:
-        raise ValueError(f"bands ({bands}) must divide 64")
-    if max_hamming >= bands:
-        raise ValueError(
-            f"max_hamming ({max_hamming}) must be < bands ({bands}): the "
-            f"pigeonhole recall guarantee needs one untouched band per "
-            f"qualifying pair"
-        )
+    slices = _simhash_bands(F.col(sig_col), bands, max_hamming)
     if horizon_s == "watermark":
         horizon_s = _interval_seconds(watermark) if ts_col is not None else None
     elif isinstance(horizon_s, str):
@@ -1486,8 +1439,6 @@ def stream_simhash_near_dedup(
             f"horizon_s must be an int, None, or the string 'watermark' "
             f"(got {horizon_s!r})"
         )
-    width = 64 // bands
-    mask = (1 << width) - 1
     sig_expr = sig if sig is not None else simhash64(F.col(text_col))
     prepared = stream.withColumn(sig_col, sig_expr)
     if ts_col is None:
@@ -1499,13 +1450,7 @@ def stream_simhash_near_dedup(
     def _banded(sigs: DataFrame, out: str) -> DataFrame:
         return sigs.select(
             F.col(sig_col).alias(out),
-            F.posexplode(
-                F.array(*[
-                    F.shiftrightunsigned(F.col(sig_col), width * b)
-                    .bitwiseAND(F.lit(mask))
-                    for b in range(bands)
-                ])
-            ).alias("__band", "__key"),
+            F.posexplode(slices).alias("__band", "__key"),
         )
 
     def foreach_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -141,6 +141,25 @@ def hyperplanes(dim: int, planes: int, seed: int = 42) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(planes)]
 
 
+def _table_planes(
+    df: DataFrame, vec_col: str, planes: int, tables: int, seed: int
+) -> tuple[int, list[list[list[float]]]]:
+    """``(dim, planes_per_table)`` for multi-table LSH over ``vec_col``:
+    the dimension comes from the first non-null vector (0 when there is
+    none; a NULL vector has no size), and table ``t`` gets the
+    hyperplanes seeded ``seed + 1000·t``."""
+    probe = (
+        df.where(F.col(vec_col).isNotNull())
+        .select(F.size(F.col(vec_col)).alias("d"))
+        .limit(1)
+        .collect()
+    )
+    dim = probe[0]["d"] if probe else 0
+    return dim, [
+        hyperplanes(dim, planes, seed + 1000 * t) for t in range(tables)
+    ]
+
+
 def lsh_bucket(vec: Column, planes: Sequence[Sequence[float]]) -> Column:
     """Random-hyperplane LSH bucket id: bit i = sign(vec · plane_i)."""
     bucket = F.lit(0).cast("long")
@@ -362,11 +381,7 @@ def lsh_bucketize(
     ``LshIndex``).  Deterministic for fixed (seed, planes, tables)."""
     import json
 
-    dim_probe = df.select(F.size(F.col(vec_col)).alias("d")).limit(1).collect()
-    dim = dim_probe[0]["d"] if dim_probe else 0
-    planes_per_table = [
-        hyperplanes(dim, planes, seed + 1000 * t) for t in range(tables)
-    ]
+    dim, planes_per_table = _table_planes(df, vec_col, planes, tables, seed)
     entries = df.select(
         F.col(id_col),
         F.col(vec_col),
@@ -646,11 +661,7 @@ def embedding_near_dups(
     ``max_bucket`` caps degenerate buckets per (table, bucket) before
     the self-join (skew control).  ``materialize=False`` returns the
     lazy, side-effect-free plan (see minhash_candidates)."""
-    dim_probe = df.select(F.size(F.col(vec_col)).alias("d")).limit(1).collect()
-    dim = dim_probe[0]["d"] if dim_probe else 0
-    planes_per_table = [
-        hyperplanes(dim, planes, seed + 1000 * t) for t in range(tables)
-    ]
+    _, planes_per_table = _table_planes(df, vec_col, planes, tables, seed)
     # ids-only banding: the per-table buckets are computed in ONE
     # map-side projection; the vector itself never leaves the scan
     bucketed = df.select(

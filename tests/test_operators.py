@@ -295,6 +295,33 @@ def test_embedding_near_dups(spark):
     assert (0, 1) in pairs and (0, 2) not in pairs
 
 
+def test_lsh_dimension_probe_skips_null_vectors(spark, tmp_path):
+    """The vector dimension comes from the first NON-NULL vector: a
+    NULL vector in the frame's first row gives the same near-dup pairs
+    and the same index hyperplanes as the frame without it."""
+    vecs = [
+        (0, [1.0, 0.0, 0.0, 0.0]),
+        (1, [0.999, 0.01, 0.0, 0.0]),   # near-dup of 0
+        (2, [0.0, 1.0, 0.0, 0.0]),
+    ]
+    schema = "vec_id long, embedding array<double>"
+    plain = spark.createDataFrame(vecs, schema)
+    # one partition, so the NULL row is the first row any probe reads
+    null_first = spark.createDataFrame([(9, None)] + vecs, schema).coalesce(1)
+
+    def pairs(df):
+        return sorted(tuple(r) for r in
+                      S.embedding_near_dups(df, threshold=0.99).collect())
+
+    got = pairs(null_first)
+    assert got == pairs(plain)
+    assert [p[:2] for p in got] == [(0, 1)]
+    a = S.lsh_bucketize(plain, str(tmp_path / "a"), planes=4, tables=2)
+    b = S.lsh_bucketize(null_first, str(tmp_path / "b"), planes=4, tables=2)
+    assert b.planes_per_table == a.planes_per_table
+    assert len(a.planes_per_table[0][0]) == 4
+
+
 def test_token_count_edges(spark):
     df = spark.createDataFrame(
         [(0, "a b  c"), (1, ""), (2, "   "), (3, "single")], ["i", "t"]

@@ -18,7 +18,9 @@ promised bit-identical results — these pin the promises directly.
   path;
 - the guarded operators must give the reference output under the
   default budget and under 0, and their guards must measure what
-  they collect; strip_boilerplate_lines' output is pinned.
+  they collect; strip_boilerplate_lines' output is pinned;
+- near_dup_components and minhash_dedup(policy="components") stay
+  within a Spark job budget per call.
 """
 
 from __future__ import annotations
@@ -375,11 +377,17 @@ def test_components_paths_match_reference(spark, guard_path, caplog,
                                           id_type):
     """~680 distinct ids; as strings their order is not the numeric
     one ("10" < "9"), so the labels check that the surrogate keeps
-    string order across the sort's range partitions."""
+    string order across the sort's range partitions.  Self-pairs
+    (one of an id with no other edge) and pairs with a NULL end are
+    no edges and name no id; a duplicated and a reversed pair change
+    nothing."""
     random.seed(9)
     cast = int if id_type == "long" else str
     edges = [(cast(random.randrange(1000)), cast(random.randrange(1000)))
-             for _ in range(600)] + [(cast(7), cast(7))]  # self-loop dropped
+             for _ in range(600)]
+    edges += [(cast(7), cast(7)), (cast(5000), cast(5000)), edges[0],
+              edges[1][::-1], (None, cast(6000)), (cast(6001), None),
+              (None, None)]
     df = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
     # AQE would coalesce the small sort into one partition
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
@@ -395,11 +403,49 @@ def test_components_paths_match_reference(spark, guard_path, caplog,
             x = comp[x]
         return x
 
-    for a, b in edges:
+    real = [(a, b) for a, b in edges
+            if a is not None and b is not None and a != b]
+    for a, b in real:
         ra, rb = root(a), root(b)
         comp[max(ra, rb)] = min(ra, rb)
-    assert got == sorted({(x, root(x)) for a, b in edges if a != b
-                          for x in (a, b)})
+    assert got == sorted({(x, root(x)) for e in real for x in e})
+
+
+def test_near_dup_job_budget(spark, caplog):
+    """Spark jobs one call runs on the local components path, counted
+    by job group around the call alone: ``near_dup_components`` runs
+    the edge checkpoint, its count (two jobs under AQE) and the
+    collect, 4 jobs, with no shuffle of the edges and no single-task
+    labeling job; ``minhash_dedup(policy="components")`` adds the
+    candidate pass, 15 jobs in all."""
+    caplog.set_level(logging.INFO, logger="jepl_spark.guard")
+    sc = spark.sparkContext
+
+    def jobs(group, call):
+        sc.setJobGroup(group, group)
+        try:
+            call()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (5, 6)], "id_a long, id_b long"
+    ).localCheckpoint(eager=True)
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{(i * 7 + k) % 23}" for k in range(30)))
+         for i in range(20)]
+        + [(100 + i, " ".join(f"w{(21 + k) % 23}" for k in range(30)))
+           for i in range(3)],
+        "doc_id long, text string",
+    ).localCheckpoint(eager=True)
+    n_components = jobs("budget-components",
+                        lambda: D.near_dup_components(pairs))
+    n_dedup = jobs("budget-minhash-dedup",
+                   lambda: D.minhash_dedup(docs, policy="components"))
+    assert _paths(caplog, "near_dup_components") == ["local", "local"]
+    assert n_components <= 4, n_components
+    assert n_dedup <= 15, n_dedup
 
 
 def test_lm_hashed_path_matches_string_path(spark):
